@@ -9,8 +9,9 @@ read_firehose_stream) tails the landing directory.
 Reproduced reference behavior:
 - `POST /endpoint` with the Firehose ack contract: 200
   {requestId, timestamp} on accept (app/app.py:99-102); 400 with
-  errorMessage on a non-JSON content type (app/app.py:69-74) or an
-  unparseable body;
+  errorMessage on a non-JSON content type (app/app.py:69-74), a
+  Content-Length that is not a non-negative integer (refused without
+  reading the body) or an unparseable body;
 - `GET /health` -> 200 (app/app.py:265-267).
 
 Deliberate upgrade (documented for parity review): the reference acks
@@ -50,6 +51,12 @@ class _Handler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(payload)
 
+    def _reject(self, message: str) -> None:
+        """Firehose-shaped 400 (app/app.py:69-74)."""
+        self._send(
+            400, {"requestId": "unknown", "timestamp": _now_ms(), "errorMessage": message}
+        )
+
     def do_GET(self):
         if self.path == "/health":
             self.send_response(200)
@@ -64,30 +71,20 @@ class _Handler(BaseHTTPRequestHandler):
             return
         ctype = (self.headers.get("Content-Type") or "").split(";")[0].strip()
         if ctype != "application/json":
-            # mirror of app/app.py:69-74
-            self._send(
-                400,
-                {
-                    "requestId": "unknown",
-                    "timestamp": _now_ms(),
-                    "errorMessage": "Content-Type must be application/json",
-                },
-            )
+            self._reject("Content-Type must be application/json")
             return
-        length = int(self.headers.get("Content-Length") or 0)
-        raw = self.rfile.read(length)
+        # a non-numeric length would raise with no reply, and a negative one
+        # makes read() block until the client closes; refuse both unread
+        length_header = (self.headers.get("Content-Length") or "0").strip()
+        if not length_header.isdecimal():
+            self._reject("Content-Length must be a non-negative integer")
+            return
+        raw = self.rfile.read(int(length_header))
         try:
             body = json.loads(raw)
             request_id = body.get("requestId", "unknown")
         except (json.JSONDecodeError, UnicodeDecodeError):
-            self._send(
-                400,
-                {
-                    "requestId": "unknown",
-                    "timestamp": _now_ms(),
-                    "errorMessage": "request body is not valid JSON",
-                },
-            )
+            self._reject("request body is not valid JSON")
             return
         # land durably, THEN ack: tmp-write + fsync + atomic rename so the
         # file stream never sees a partial file and an acked batch is never

@@ -1,24 +1,25 @@
 """Structured Streaming surface.
 
 The reference is a streaming ETL service (HTTP push -> transform -> syslog,
-/root/reference/app/app.py:60-102,219-263). Spark is pull-based, so the
-idiomatic rebuild is: a thin receiver lands each HTTP request body as a
-file (one JSON envelope per line) and ``readStream`` tails the landing
-directory; the Milestone-1 batch transforms run unchanged on the stream;
-sinks are a syslog ``foreach`` writer (partition-local UDP socket), a
-parquet archive, and a quarantine (dead-letter) stream.
+app/app.py:60-102,219-263). Spark is pull-based, so the idiomatic rebuild
+is: a thin receiver lands each HTTP request body as a file (one JSON
+envelope per line) and ``readStream`` tails the landing directory; ``start_pipeline`` runs ONE ``foreachBatch`` query that decodes
+each micro-batch once with the Milestone-1 batch transforms and writes the
+syslog datagrams (one UDP socket per partition), a parquet archive and a
+quarantine (dead-letter) from it.
 
 Delivery semantics: the reference acks before processing (at-most-once,
-app/app.py:96-102). Checkpointing gives this pipeline at-least-once, and
-``dedup_within_watermark`` upgrades it to effectively-once on a record
-fingerprint.
+app/app.py:96-102). Here the file source replays an unfinished batch from
+the checkpoint. Archive and quarantine files are named by batch id, so a
+replay replaces them: exactly-once. Syslog datagrams are re-sent on
+replay: at-least-once. ``dedup_within_watermark`` is the operator for
+effectively-once on a record fingerprint downstream.
 """
 
 from dns_log_transformer_spark.streaming.source import (
     read_firehose_stream,
     read_events_stream,
 )
-from dns_log_transformer_spark.streaming.sinks import SyslogWriter, syslog_sink
 from dns_log_transformer_spark.streaming.pipeline import (
     build_streaming_lines,
     start_pipeline,
@@ -78,8 +79,6 @@ from dns_log_transformer_spark.streaming.winnow_index import (
 __all__ = [
     "read_firehose_stream",
     "read_events_stream",
-    "SyslogWriter",
-    "syslog_sink",
     "build_streaming_lines",
     "start_pipeline",
     "tumbling_counts",

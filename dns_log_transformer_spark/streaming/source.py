@@ -30,24 +30,14 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def read_firehose_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def read_firehose_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
     """Tail ``landing_dir`` for Firehose request bodies (1 JSON/line).
 
     Output: one row per envelope with column ``value`` (raw JSON string) —
     the exact input shape ``transforms.parse_envelope`` expects, so batch
     and streaming share one code path.
-
-    ``maxFilesPerTrigger`` bounds micro-batch size (the streaming analog
-    of the reference's 10,000-records-per-request cap, app/app.py:43).
     """
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(landing_dir)
+    return spark.readStream.format("text").load(landing_dir)
 
 
 def read_events_stream(

@@ -4,6 +4,7 @@ lines), with the receiver's gates mirroring app/app.py:60-102."""
 
 from __future__ import annotations
 
+import http.client
 import json
 import os
 import urllib.error
@@ -66,3 +67,31 @@ def test_receiver_to_pipeline(spark, tmp_path):
         q.awaitTermination(timeout=120)
     rows = spark.read.parquet(os.path.join(work, "archive")).orderBy("line_no").collect()
     assert [r["line"] for r in rows] == expected_bind9_lines(rec, "@0x000000000000")
+
+
+def test_receiver_rejects_bad_content_length(tmp_path):
+    """A non-numeric or negative Content-Length gets a Firehose-shaped 400
+    without the body being read, and nothing lands. Read as a length, the
+    first raises before any reply and the second blocks the handler
+    until the client closes."""
+    landing = str(tmp_path / "landing")
+    rx = FirehoseReceiver(landing, host="127.0.0.1").start()
+    try:
+        for length in ("abc", "-5"):
+            conn = http.client.HTTPConnection("127.0.0.1", rx.port, timeout=10)
+            try:
+                conn.putrequest("POST", "/endpoint")
+                conn.putheader("Content-Type", "application/json")
+                conn.putheader("Content-Length", length)
+                conn.endheaders(b'{"requestId": "r", "records": []}')
+                resp = conn.getresponse()
+                body = json.loads(resp.read())
+            finally:
+                conn.close()
+            assert resp.status == 400, length
+            assert body["requestId"] == "unknown"
+            assert isinstance(body["timestamp"], int)
+            assert "Content-Length" in body["errorMessage"]
+        assert os.listdir(landing) == []
+    finally:
+        rx.stop()

@@ -16,6 +16,7 @@ import json
 import os
 import socket
 import threading
+import time
 
 from pyspark.sql import functions as F
 
@@ -101,6 +102,104 @@ def test_pipeline_end_to_end(spark, tmp_path):
     assert len(payloads) == 2
     assert all(p.startswith("<30>") for p in payloads)
     assert {p[4:] for p in payloads} == {r["line"] for r in rows}
+
+    # the archive is flat files: DuckDB and other readers glob them
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        flat = con.execute(
+            f"SELECT line FROM read_parquet('{work}/archive/*.parquet') ORDER BY line_no"
+        ).fetchall()
+    finally:
+        con.close()
+    assert [r[0] for r in flat] == [r["line"] for r in rows]
+
+
+def test_pipeline_batch_replay_writes_once(spark, tmp_path):
+    """A batch replayed after a crash between its writes and the checkpoint
+    commit replaces its own archive and quarantine files rather than
+    adding copies, leaves no staging dir, and keeps other batches' files."""
+    from dns_log_transformer_spark.streaming.pipeline import batch_writer
+
+    work = str(tmp_path / "work")
+    archive, quarantine = os.path.join(work, "archive"), os.path.join(work, "quarantine")
+    bad = make_record(query_timestamp="bad")
+    raw = spark.createDataFrame(
+        [(envelope_json([make_record(), bad], request_id="r0"),)], ["value"]
+    )
+    write = batch_writer(work, None, 514, archive=True, deterministic_ids=True)
+    write(raw, 0)
+    write(raw, 0)
+    later = spark.createDataFrame(
+        [(envelope_json([make_record()], request_id="r1"),)], ["value"]
+    )
+    write(later, 1)
+
+    lines = spark.read.parquet(archive).collect()
+    assert sorted((r["requestId"], r["record_idx"], r["line_no"]) for r in lines) == [
+        ("r0", 0, 0),
+        ("r0", 0, 1),
+        ("r1", 0, 0),
+        ("r1", 0, 1),
+    ]
+    rejects = spark.read.parquet(quarantine).collect()
+    assert [(r["requestId"], r["record_idx"], r["reject_reason"]) for r in rejects] == [
+        ("r0", 1, "bad_query_timestamp")
+    ]
+    for d in (archive, quarantine):
+        assert not [n for n in os.listdir(d) if n.startswith("_")]
+
+
+def test_syslog_skips_oversize_datagram(spark, tmp_path, caplog):
+    """A line too long for one UDP datagram is skipped and counted; the
+    other lines still arrive, the pipeline query does not fail and the
+    batch logs the skip count."""
+    import logging
+
+    from dns_log_transformer_spark.streaming.sinks import send_syslog
+
+    caplog.set_level(
+        logging.WARNING, logger="dns_log_transformer_spark.streaming.pipeline"
+    )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    work = str(tmp_path / "work")
+    huge = make_record(query_name="a" * 70_000 + ".")
+    normal = make_record(query_name="ok.example.com.")
+    (landing / "b1.json").write_text(
+        envelope_json([huge, normal], request_id="req-big") + "\n"
+    )
+    want = ["<30>" + ln for ln in expected_bind9_lines(normal, "@0x000000000001")]
+
+    collector = UdpCollector()
+    try:
+        raw = spark.read.text(str(landing))
+        lines, _ = build_streaming_lines(raw, deterministic_ids=True)
+        # query line and reply line both carry the oversize name
+        assert send_syslog(lines, "127.0.0.1", collector.port) == 2
+        (q,) = start_pipeline(
+            spark,
+            str(landing),
+            work,
+            syslog_host="127.0.0.1",
+            syslog_port=collector.port,
+            available_now=True,
+            deterministic_ids=True,
+        )
+        assert q.awaitTermination(timeout=120)
+        assert q.exception() is None
+        deadline = time.monotonic() + 10
+        while len(collector.datagrams) < 2 * len(want) and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        collector.stop()
+
+    # once from the direct send, once from the pipeline
+    assert sorted(d.decode() for d in collector.datagrams) == sorted(want * 2)
+    assert spark.read.parquet(os.path.join(work, "archive")).count() == 4
+    assert "batch 0: 2 syslog datagrams not sent" in caplog.text
 
 
 def _write_events(path, name, rows):
