@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dns_log_transformer_spark.operators.caching import persist_tracked
+from dns_log_transformer_spark.operators.text import upstream_splits
 
 #: Hash buckets for split/sampling decisions (4 decimal digits of rate).
 N_BUCKETS = 10_000
@@ -113,32 +114,6 @@ def seeded_shuffle(
     return ranked.drop("_sfl_key")
 
 
-#: (session id, sorted input files) -> upstream split count. The .rdd
-#: probe compiles the physical plan (and under AQE can materialize
-#: upstream stages) — ~1 s per NEW plan, the same cost
-#: text.rebalance_for_fanout caches away (text.py _REBALANCE_CACHE).
-#: Keyed on input files: two plans over the same files may partition
-#: differently post-shuffle, but for the max(conf, splits) decision an
-#: input-bytes-scaled reading is what matters.
-_SPLITS_CACHE: dict = {}
-
-
-def _upstream_splits(df: DataFrame) -> int:
-    key = None
-    try:
-        files = df.inputFiles()  # driver-side listing, no job
-        if files:
-            key = (id(df.sparkSession), tuple(sorted(files)))
-    except Exception:
-        pass
-    if key is not None and key in _SPLITS_CACHE:
-        return _SPLITS_CACHE[key]
-    n = df.rdd.getNumPartitions()
-    if key is not None:
-        _SPLITS_CACHE[key] = n
-    return n
-
-
 def global_rank(
     df: DataFrame,
     sort_cols: list,
@@ -172,7 +147,7 @@ def global_rank(
     spark = df.sparkSession
     n_parts = num_partitions or max(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
-        _upstream_splits(df),
+        upstream_splits(df),
     )
     cols = [F.col(c) if isinstance(c, str) else c for c in sort_cols]
     stamped = (

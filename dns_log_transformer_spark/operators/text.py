@@ -42,10 +42,32 @@ def tokens(text: Column) -> Column:
     )
 
 
-#: (session id, sorted input files) -> under-split decision. The probe
-#: (`df.rdd.getNumPartitions()`) costs a ~1 s no-op job per NEW plan, so
-#: ops sharing an input table must share one probe.
-_REBALANCE_CACHE: dict[tuple[int, tuple[str, ...]], bool] = {}
+#: (session id, sorted input files) -> split count. The probe
+#: (`df.rdd.getNumPartitions()`) compiles the physical plan, and under
+#: AQE runs any exchange in it (~1 s per NEW plan), so callers over the
+#: same input files share one probe. Two plans over the same files may
+#: partition differently after a shuffle, but the callers' decisions
+#: need only an input-bytes-scaled reading.
+_SPLITS_CACHE: dict[tuple[int, tuple[str, ...]], int] = {}
+
+
+def upstream_splits(df: DataFrame) -> int:
+    """Partition count of ``df``'s plan, cached per input file set. On a
+    scan it is the split count, which grows with input bytes
+    (``maxPartitionBytes``), and counting it starts no job."""
+    key = None
+    try:
+        files = df.inputFiles()  # driver-side listing, no job
+        if files:
+            key = (id(df.sparkSession), tuple(sorted(files)))
+    except Exception:
+        pass
+    if key in _SPLITS_CACHE:
+        return _SPLITS_CACHE[key]
+    n = df.rdd.getNumPartitions()
+    if key is not None:
+        _SPLITS_CACHE[key] = n
+    return n
 
 
 def rebalance_for_fanout(df: DataFrame) -> DataFrame:
@@ -58,20 +80,7 @@ def rebalance_for_fanout(df: DataFrame) -> DataFrame:
     pre-explosion rows; when the scan is already well-split this is a
     no-op (no shuffle added)."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    key = None
-    try:
-        files = df.inputFiles()  # driver-side listing, no job
-        if files:
-            key = (id(df.sparkSession), tuple(sorted(files)))
-    except Exception:
-        pass
-    if key is not None and key in _REBALANCE_CACHE:
-        need = _REBALANCE_CACHE[key]
-    else:
-        need = df.rdd.getNumPartitions() < target
-        if key is not None:
-            _REBALANCE_CACHE[key] = need
-    return df.repartition(target) if need else df
+    return df.repartition(target) if upstream_splits(df) < target else df
 
 
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -324,15 +324,15 @@ def corpus_warcgz_to_shards(spark: SparkSession, sf: str) -> DataFrame:
     per-stage scans); packing shards by id (one shuffle,
     applyInPandas per shard).
 
-    BENCH CAVEAT (disclosed, not fixable per-query): bench.py times
-    the RETURNED plan's execution; the eager checkpoints run at plan
-    build, so this query's bench row (~1.7 s) is only the funnel
-    aggregation — the full per-invocation cost is the parity sweep's
-    row (~12 s at sf0.1; the sweep times build+execute together).
-    eager=False does NOT move the cost into the timed section: the
-    rebalance probes / AQE stage materialization execute the walk
-    during build anyway, and WITHOUT the checkpoint cache they re-run
-    it (measured 16.5 s warm build vs 1.8 s eager).
+    BUILD VS EXEC: the eager checkpoints run at plan build, so most of
+    this query's cost is build, not the returned plan's execution.
+    perfbench times the two together and prints the split with
+    ``--trace 1``: at sf0.001 on 4 cores, three cold passes measured
+    12.8-14.1 s build (48 jobs, 476 tasks) and 1.3-1.6 s exec.
+    eager=False does NOT move the cost into exec: the rebalance probes
+    / AQE stage materialization execute the walk during build anyway,
+    and WITHOUT the checkpoint cache they re-run it (measured 16.5 s
+    warm build vs 1.8 s eager).
     """
     from dns_log_transformer_spark.operators import corpus, dedup
     from dns_log_transformer_spark.operators import text as text_ops

@@ -33,6 +33,10 @@ import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 
+#: CR and LF -> space, so each landed body is one line
+_ONE_LINE = bytes.maketrans(b"\r\n", b"  ")
+
+
 def _now_ms() -> int:
     return int(time.time() * 1000)
 
@@ -93,7 +97,10 @@ class _Handler(BaseHTTPRequestHandler):
         tmp = os.path.join(self.landing_dir, f".{name}.tmp")
         final = os.path.join(self.landing_dir, name)
         with open(tmp, "w") as f:
-            f.write(raw.decode("utf-8", errors="replace"))
+            # the landing source reads one envelope per line; CR and LF in
+            # valid JSON are insignificant whitespace (json.loads has refused
+            # them raw inside strings), so a pretty-printed body lands whole
+            f.write(raw.translate(_ONE_LINE).decode("utf-8", errors="replace"))
             f.write("\n")
             f.flush()
             os.fsync(f.fileno())

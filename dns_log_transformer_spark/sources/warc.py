@@ -58,27 +58,31 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dns_log_transformer_spark.operators.text import upstream_splits
+
 #: Record header terminator / record separator (WARC/1.0 framing).
 CRLF2 = "\r\n\r\n"
 MAGIC = "WARC/1.0\r\n"
 
 
-def _pin_group_parallelism(df: DataFrame, key: str) -> DataFrame:
-    """Keyed repartition immediately before the pack's group-by so the
-    blob rows — and everything riding their partitioning downstream
-    (gzip split, byte walk) — stay spread across the session's shuffle
-    partitions. AQE's size-based partition coalescing judges the pack
-    shuffle by its BYTES, which are tiny, and folded the whole parse
-    path onto ONE task (r15 profile: corpus_warc_http ran 3 tasks
-    total, 1.9 s serial); blob rows are compute-heavy per byte, so
-    bytes-based coalescing is the wrong policy here. A user-specified
-    repartition is exempt from AQE coalescing AND is reused by the
-    group-by on the same key, so the plan still carries exactly one
-    exchange before the walk. The count is the session's configured
-    shuffle parallelism (the value a cluster deployment sizes), not a
-    local constant."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(n, key)
+def _pin_group_parallelism(rows: DataFrame, key: str, source: DataFrame) -> DataFrame:
+    """Keyed repartition of ``rows`` right before the pack's group-by, to
+    ``max(task slots, splits of the packer's input source)``. The blob
+    rows' Python stages downstream (gzip UDF, member split) ride this
+    partitioning, and each Python task has a fixed cost (~0.25 s on 4
+    cores, whatever its input): sized to the 32 shuffle partitions,
+    those stages ran in eight waves. Slots are ``defaultParallelism``
+    (rebalance_for_fanout's target); the input's splits grow with its
+    bytes, so on a cluster the count grows with the corpus, as
+    global_rank's does. The splits are counted on ``source``: on a scan
+    that starts no job, while on ``rows`` the probe would run a
+    distinct's exchange under AQE. A user-specified repartition is
+    exempt from AQE's size-based coalescing, which judged this shuffle
+    by its tiny bytes and folded the whole parse onto ONE task (r15:
+    corpus_warc_http ran 3 tasks, 1.9 s serial), and the group-by on the
+    same key reuses it: one exchange before the walk."""
+    slots = source.sparkSession.sparkContext.defaultParallelism
+    return rows.repartition(max(slots, upstream_splits(source)), key)
 
 
 def pack_warc_blobs(
@@ -119,6 +123,7 @@ def pack_warc_blobs(
                 rec.alias("_rec"),
             ),
             "blob_id",
+            df,
         )
         .groupBy("blob_id")
         .agg(
@@ -360,6 +365,7 @@ def pack_warc_http_blobs(
                 pair.alias("_rec"),
             ),
             "blob_id",
+            df,
         )
         .groupBy("blob_id")
         .agg(
@@ -706,7 +712,7 @@ def pack_warc_gz_blobs(
             )
         )
 
-    grouped = _pin_group_parallelism(rows, "blob_id").groupBy("blob_id").agg(
+    grouped = _pin_group_parallelism(rows, "blob_id", df).groupBy("blob_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("seq", "rec"))),
             lambda s: s["rec"],

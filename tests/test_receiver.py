@@ -95,3 +95,32 @@ def test_receiver_rejects_bad_content_length(tmp_path):
         assert os.listdir(landing) == []
     finally:
         rx.stop()
+
+
+def test_receiver_lands_pretty_printed_body_as_one_line(spark, tmp_path):
+    """An indented JSON body (CR/LF between tokens) is valid Firehose input.
+    The landing source splits on CR/LF, so landed verbatim it became nine
+    unparseable lines and its records vanished with no quarantine row;
+    landed as one line, its BIND9 lines come out of the pipeline."""
+    from dns_log_transformer_spark.streaming import build_streaming_lines
+
+    landing = str(tmp_path / "landing")
+    rx = FirehoseReceiver(landing, host="127.0.0.1").start()
+    try:
+        rec = make_record()
+        pretty = json.dumps(json.loads(envelope_json([rec], request_id="req-7")), indent=2)
+        code, body = _post(
+            f"http://127.0.0.1:{rx.port}/endpoint", pretty.replace("\n", "\r\n").encode()
+        )
+        assert code == 200 and body["requestId"] == "req-7"
+    finally:
+        rx.stop()
+    (name,) = [f for f in os.listdir(landing) if not f.startswith(".")]
+    with open(os.path.join(landing, name), newline="") as f:
+        landed = f.read()
+    assert landed.endswith("\n") and landed.count("\n") == 1 and "\r" not in landed
+    lines, quarantine = build_streaming_lines(spark.read.text(landing), deterministic_ids=True)
+    assert [r["line"] for r in lines.orderBy("line_no").collect()] == expected_bind9_lines(
+        rec, "@0x000000000000"
+    )
+    assert quarantine.count() == 0

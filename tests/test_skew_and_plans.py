@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from dns_log_transformer_spark import plans
@@ -604,6 +607,52 @@ def test_warc_walk_plan_size_linear(spark):
     n8 = plans.optimized_plan_size(parse_warc_records(blobs, max_records=8))
     assert plans.plan_size_lint(parse_warc_records(blobs, max_records=8)) == []
     assert n8 < 3 * n4, (n4, n8)
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of the jobs this thread's current job group (or no group) ran."""
+    sc = spark.sparkContext
+    return set(sc.statusTracker().getJobIdsForGroup(sc.getLocalProperty("spark.jobGroup.id")))
+
+
+@pytest.mark.parametrize(
+    "packer", ["pack_warc_blobs", "pack_warc_http_blobs", "pack_warc_gz_blobs"]
+)
+def test_warc_pack_shuffle_sized_to_task_slots(spark, packer):
+    """The pack's keyed repartition is sized to max(task slots, input
+    splits), not to spark.sql.shuffle.partitions: its Python stages
+    (gzip UDF, member split) pay a fixed cost per task. Building the
+    packer and compiling its plan start no Spark job, and the group-by
+    reuses the keyed exchange."""
+    from dns_log_transformer_spark.sources import warc
+
+    docs = read_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    before = _job_ids(spark)
+    plan = getattr(warc, packer)(docs)._jdf.queryExecution().executedPlan().toString()
+    assert _job_ids(spark) == before
+    want = max(spark.sparkContext.defaultParallelism, docs.rdd.getNumPartitions())
+    keyed = re.findall(
+        r"Exchange hashpartitioning\(blob_id#\d+L?, (\d+)\), REPARTITION_BY_NUM", plan
+    )
+    assert keyed == [str(want)], plan
+    # nothing above the keyed exchange shuffles again
+    assert plan.split("REPARTITION_BY_NUM")[0].count("Exchange ") == 1, plan
+
+
+def test_upstream_splits_counts_scan_once(spark, tmp_path):
+    """upstream_splits on a parquet scan is the scan's split count,
+    counted without a job, and later calls over the same files return
+    the cached count (here on a plan whose own count would be 5)."""
+    from dns_log_transformer_spark.operators.text import upstream_splits
+
+    path = str(tmp_path / "three_files")
+    spark.range(30).repartition(3).write.parquet(path)
+    scan = spark.read.parquet(path)
+    before = _job_ids(spark)
+    assert upstream_splits(scan) == 3
+    assert upstream_splits(scan.filter("id > 3").repartition(5)) == 3
+    assert _job_ids(spark) == before
+    assert scan.rdd.getNumPartitions() == 3
 
 
 # ---------------------------------------------------------------------------
