@@ -6,9 +6,8 @@ linted at the gate fixtures: at sf0.01/sf0.1 every broadcast genuinely
 fits, and the bad decision only *manifests* when the input is big.
 So the tripwire is empirical and runs at the x100 replica scale:
 
-1. build every registered query's plan against scratch/x100 (queries
-   needing tables the replica set lacks are skipped) and list the ones
-   whose physical plan contains BroadcastHashJoin / BNLJ;
+1. build every registered query's plan against scratch/x100 and list
+   the ones whose physical plan contains BroadcastHashJoin / BNLJ;
 2. optionally (--run) EXECUTE every flagged query at x100 — a
    mis-broadcast either OOMs loudly ('Not enough memory to build and
    broadcast') or shows up as a multi-minute build+spill outlier.
@@ -20,21 +19,25 @@ second decade read 11.9x instead of ~5x. Re-run after adding any join
 whose both sides grow with the corpus.
 
 Usage: python tools/bhj_sweep_r13.py [--run]
-Requires scratch/x100 (tools/scale100_r9.py builds it).
+Requires scratch/x100 (`python tools/scale.py --factor 100` builds it).
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 
 from dns_log_transformer_spark.operators.caching import release_all  # noqa: E402
 from dns_log_transformer_spark.session import get_spark  # noqa: E402
-from tools.scale100_r9 import DST100  # noqa: E402
+from tools.scale import replica_dir  # noqa: E402
+
+DST100 = replica_dir(100)
 
 
 def main() -> int:
@@ -47,7 +50,7 @@ def main() -> int:
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception:
             release_all()
-            continue  # table not in the replica set
+            continue  # plan build failed at x100
         release_all()
         if "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan:
             flagged.append(name)

@@ -1,14 +1,15 @@
 #!/usr/bin/env python
-"""Dump `.explain("formatted")` for named queries to plans/r15/.
+"""Dump `.explain("formatted")` for named queries.
 
 Usage:
-  python tools/dump_plan_r15.py before dedup_blocking_tradeoff ...
-  python tools/dump_plan_r15.py after  dedup_blocking_tradeoff ...
+  python tools/dump_plan.py plans/r17 before dedup_blocking_tradeoff ...
+  python tools/dump_plan.py plans/r17 after  dedup_blocking_tradeoff ...
 
-Writes plans/r15/<query>_<tag>.txt. The physical plan is the STATIC
-plan (AdaptiveSparkPlan isFinalPlan=false) — the same artifact the
-broadcast lint audits; Exchange counts / join strategies / PushedFilters
-are all visible in it.
+Writes OUTDIR/<query>_<tag>.txt, planned at $SPARK_GRAFT_SF_DIR
+(default sf0.1). The physical plan is the STATIC plan
+(AdaptiveSparkPlan isFinalPlan=false) — the same artifact the broadcast
+lint audits; Exchange counts / join strategies / PushedFilters are all
+visible in it.
 """
 
 from __future__ import annotations
@@ -20,17 +21,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    outdir, tag, *names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from dns_log_transformer_spark.operators.caching import release_all
     from dns_log_transformer_spark.queries import ALL_QUERIES
     from dns_log_transformer_spark.session import get_spark
 
-    spark = get_spark("dump_plan_r15")
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    outdir = os.path.join(here, "plans", "r15")
+    spark = get_spark("dump_plan")
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = ALL_QUERIES[name].fn(spark, sf_dir)

@@ -26,7 +26,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 
@@ -36,6 +37,7 @@ from dns_log_transformer_spark.broadcast_allowlist import (  # noqa: E402
 )
 from dns_log_transformer_spark.operators.caching import release_all  # noqa: E402
 from dns_log_transformer_spark.session import get_spark  # noqa: E402
+from tools.scale import replica_dir  # noqa: E402
 
 DEFAULT_FIXTURES = [
     "/root/testdata/sf0.001",
@@ -249,7 +251,7 @@ def main() -> int:
     # FLIPS when the broadcast is gone there, RAN-CLEAN when it
     # persists (these rationales are machine-owned and refresh on
     # every regeneration; hand-written BOUNDED/SCAN-FED survive)
-    x100 = "/root/repo/scratch/x100"
+    x100 = replica_dir(100)
     if os.path.isdir(x100):
         for name, entry in out.items():
             if not any(w.startswith("X100") for w in entry.values()):
@@ -266,7 +268,9 @@ def main() -> int:
             for sig, why in entry.items():
                 if why.startswith("X100"):
                     entry[sig] = _X100_CLEAN if sig in sigs100 else _X100_FLIPS
-    path = "/root/repo/dns_log_transformer_spark/broadcast_allowlist.py"
+    path = os.path.join(
+        REPO_ROOT, "dns_log_transformer_spark", "broadcast_allowlist.py"
+    )
     with open(path, "w") as f:
         f.write('"""Static-broadcast adjudication record (VERDICT r13 #1).\n')
         f.write("\n")

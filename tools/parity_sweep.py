@@ -3,7 +3,7 @@ the round-9 hardening tool that found the degenerate-pool z-test crash
 and the .xx5 money-percentile rounding divergence, both invisible at
 the gated sf0.01.
 
-Usage: python tools/parity_sweep.py [sf_dir] [--out PATH]
+Usage: python tools/parity_sweep.py [sf_dir [NAME ...]] [--out PATH]
 (default sf0.001; without --out the checked-in SWEEP_DETAIL_<sf>.json
 is only written when it is already git-dirty or absent — an ad-hoc
 verification run cannot silently clobber a committed round-end record
@@ -11,7 +11,10 @@ verification run cannot silently clobber a committed round-end record
 
 Runs every registered query AND its DuckDB oracle at the given fixture
 and applies the exact driver-style compare (row count + schema +
-order-insensitive values via tests/test_oracle_parity helpers).
+order-insensitive values via tests/test_oracle_parity helpers),
+printing one OK/FAIL line per query. Named queries after sf_dir
+restrict the run to them, so a touched operator is verified in seconds;
+a named run writes no SWEEP_DETAIL file.
 Not part of the pytest suite (it would roughly double the parity
 suite's wall time); run it whenever queries change rounding, guards,
 or degenerate-input behavior.
@@ -19,10 +22,11 @@ or degenerate-input behavior.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import duckdb  # noqa: E402
 
@@ -44,7 +48,6 @@ from tools.artifacts import artifact_writable  # noqa: E402
 
 def main() -> int:
     import json
-    import os
     import time
 
     argv = list(sys.argv[1:])
@@ -52,11 +55,20 @@ def main() -> int:
     if "--out" in argv:
         i = argv.index("--out")
         if i + 1 >= len(argv):
-            print("usage: parity_sweep.py [sf_dir] [--out PATH]")
+            print("usage: parity_sweep.py [sf_dir [NAME ...]] [--out PATH]")
             return 2
         out_path = argv[i + 1]
         del argv[i : i + 2]
     sf = argv[0] if argv else "/root/testdata/sf0.001"
+    names = argv[1:]
+    queries = entry_mod.queries()
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}")
+        return 2
+    if names and out_path:
+        print("--out applies to a full sweep only")
+        return 2
     load_start = [round(x, 2) for x in os.getloadavg()]
     spark = get_spark("parity_sweep")
     con = duckdb.connect()
@@ -67,10 +79,10 @@ def main() -> int:
     oracles = entry_mod.oracle_sql()
     bad: list[tuple[str, str]] = []
     timings: dict[str, float] = {}  # Spark-side wall per query (VERDICT r10 #7)
-    for name, fn in sorted(entry_mod.queries().items()):
+    for name in names or sorted(queries):
         try:
             t0 = time.perf_counter()
-            sdf = fn(spark, sf)
+            sdf = queries[name](spark, sf)
             spdf = sdf.toPandas()
             timings[name] = round(time.perf_counter() - t0, 3)
             # codegen compile lint (VERDICT r11 #1): the class this
@@ -97,12 +109,16 @@ def main() -> int:
             if name in oracles:
                 ddf = con.execute(oracles[name]).df()
                 assert_frames_match(spdf, ddf, name)
+            print(f"OK   {name} ({timings[name]:.2f}s)", flush=True)
         except Exception as ex:  # noqa: BLE001 — report, keep sweeping
             bad.append((name, str(ex).splitlines()[0][:160]))
+            print(f"FAIL {name} -> {bad[-1][1]}", flush=True)
             release_all()
-    print(f"{sf}: mismatches {len(bad)} / {len(entry_mod.queries())}")
+    print(f"{sf}: mismatches {len(bad)} / {len(names or queries)}")
     for n, m in bad:
         print(f"  {n} -> {m}")
+    if names:
+        return 1 if bad else 0
     # per-query sweep timings, slowest first — a merged home that
     # quietly doubled its off-gate-fixture cost shows up here without a
     # bench run; persisted so the round-end record can cite it
@@ -120,7 +136,7 @@ def main() -> int:
     # state recorded, a future high reading self-identifies as
     # contention or demands investigation mechanically)
     tag = sf.rstrip("/").rsplit("/", 1)[-1]
-    target = out_path or f"/root/repo/SWEEP_DETAIL_{tag}.json"
+    target = out_path or os.path.join(REPO_ROOT, f"SWEEP_DETAIL_{tag}.json")
     if out_path is None and not artifact_writable(target):
         print(f"NOT writing {target}: committed round-end record is "
               "git-clean — pass --out to overwrite or redirect "

@@ -26,14 +26,16 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from dns_log_transformer_spark.session import get_spark, read_table  # noqa: E402
+from tools.scale import SRC, replica_dir  # noqa: E402
 
-SRC = "/root/testdata/sf0.1"
-X10 = "/root/repo/scratch/x10"
+X10 = replica_dir(10)
+WORK = os.path.join(REPO_ROOT, "scratch", "stream_r16")
 
 
 def _run_available_now(df, name, mode="update"):
@@ -57,7 +59,7 @@ def gz_leg(spark):
 
     out = {}
     for tag, sf in (("1x", SRC), ("10x", X10)):
-        stage = f"/root/repo/scratch/stream_r16/wgz_{tag}"
+        stage = os.path.join(WORK, f"wgz_{tag}")
         if not os.path.isfile(os.path.join(stage, "_SUCCESS")):
             docs = read_table(spark, sf, "documents")
             blobs = warc.pack_warc_gz_blobs(docs, per_blob=20, body_suffix="")
@@ -115,9 +117,7 @@ def state_leg(spark):
     results = {}
     for tag, sf in (("1x", SRC), ("10x", X10)):
         for name, (op, sample) in ops.items():
-            jdir = (
-                f"/root/repo/scratch/stream_r16/events_json_{tag}_s{sample}"
-            )
+            jdir = os.path.join(WORK, f"events_json_{tag}_s{sample}")
             if not os.path.isdir(jdir):
                 ev = read_table(spark, sf, "events").select(
                     "event_id",
@@ -162,14 +162,14 @@ def state_leg(spark):
 
 def main():
     which = set(sys.argv[1:]) or {"gz", "state"}
-    os.makedirs("/root/repo/scratch/stream_r16", exist_ok=True)
+    os.makedirs(WORK, exist_ok=True)
     extra = {}
     if "state" in which:
         # the TWS operators need the tws_driver.py environment: a
         # non-daemon Python worker (daemon forks crash talking to the
         # TWS state server here), the RocksDB-backed provider, and the
         # vendored protobuf shim from tests/conftest
-        sys.path.insert(0, "/root/repo/tests")
+        sys.path.insert(0, os.path.join(REPO_ROOT, "tests"))
         import conftest  # noqa: F401
 
         extra["spark.python.use.daemon"] = "false"
