@@ -928,8 +928,10 @@ def blocking_tradeoff(
 ) -> DataFrame:
     """``blocking_audit`` extended from report to recommendation
     (VERDICT r12 #7): ONE row of Christen metrics per band setting, so
-    the "which (hashes, bands) config" tuning decision — answered by
-    hand in tools/audit_bands_r12.py — is itself an attested query.
+    the "which (hashes, bands) config" tuning decision — once answered
+    by hand with a one-off audit tool, whose sf0.1 sweep PLANS.md
+    records under "Band-configuration sweep" — is itself an attested
+    query.
 
     Each ``b`` in ``band_settings`` must divide ``num_hashes``; at 12
     hashes the default sweep walks the s-curve midpoint (1/b)^(1/r)

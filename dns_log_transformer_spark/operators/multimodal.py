@@ -5,11 +5,12 @@ a row carries ``blob: binary`` plus lightweight typed metadata columns;
 heavy decode/feature work runs in Arrow-batched ``mapInPandas`` so bytes
 stream through Python in columnar batches, never row-at-a-time.
 
-The decode step itself is STUBBED in this environment (no PIL/ffmpeg in
-the container): ``decode_image_meta`` raises NotImplementedError unless a
-decoder is injected, and ``fake_image_meta`` provides the deterministic
-stand-in used by tests/oracle — the Spark-side plumbing (schema,
-partitioning, UDF signature, batch shape) is real and tested either way.
+The pixel decode is STUBBED in this environment (no PIL/ffmpeg in the
+container): ``fake_image_meta`` and ``fake_pixels`` are the deterministic
+stand-ins ``image_profile`` and ``phash64`` run unless a decoder is
+injected — the Spark-side plumbing (schema, partitioning, UDF signature,
+batch shape) is real and tested either way. The byte-level sniffers
+further down need no decoder: they parse real headers.
 """
 
 from __future__ import annotations
@@ -40,9 +41,7 @@ def fake_image_meta(blob: bytes, doc_id: int) -> tuple[int, int, int]:
 
 def _meta_columns(pdf: "pd.DataFrame", meta: list, id_col: str) -> dict:
     """Assemble the IMAGE_META_SCHEMA column dict from decoded
-    (width, height, channels) tuples — the ONE definition image_meta
-    and image_profile share (two live copies are a dtype-divergence
-    trap; code-review r10)."""
+    (width, height, channels) tuples for ``image_profile``."""
     return {
         "doc_id": pdf[id_col].astype("int64"),
         "n_bytes": pdf["blob"].map(len).astype("int64"),
@@ -50,31 +49,6 @@ def _meta_columns(pdf: "pd.DataFrame", meta: list, id_col: str) -> dict:
         "height": pd.Series([m[1] for m in meta], dtype="int32"),
         "channels": pd.Series([m[2] for m in meta], dtype="int32"),
     }
-
-
-def image_meta(
-    df: DataFrame,
-    decoder: Callable[[bytes, int], tuple[int, int, int]] | None = None,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Extract per-image metadata from binary payloads via mapInPandas.
-
-    ``decoder(blob, id) -> (width, height, channels)``; defaults to the
-    deterministic fake. Passing a real decoder (e.g. PIL-based) is the
-    production path:
-
-        def pil_decoder(blob, _id):
-            raise NotImplementedError("PIL not available in this container")
-    """
-    dec = decoder or fake_image_meta
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = [dec(b, i) for b, i in zip(pdf["blob"], pdf[id_col])]
-            yield pd.DataFrame(_meta_columns(pdf, meta, id_col))
-
-    blobs = df if "blob" in df.columns else attach_blob(df)
-    return blobs.select(id_col, "blob").mapInPandas(extract, IMAGE_META_SCHEMA)
 
 
 RESIZE_SCHEMA = "doc_id bigint, width int, height int, resized binary"
@@ -279,13 +253,11 @@ def image_profile(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Header metadata AND the 64-bit average-hash bands in ONE Arrow
-    pass over the binary payloads (r10: backs the merged mm_image_meta
-    registration — the old image_meta + phash64 pair each paid a full
-    mapInPandas scan; a census that wants both should decode once).
-    Inject ``decoder``/``pixels`` exactly as in the split operators,
-    which remain for callers needing only one half; the meta assembly
-    and the band votes are the SAME helpers those operators run, so
-    the three surfaces cannot diverge."""
+    pass over the binary payloads (backs mm_image_meta: a census that
+    wants both should decode once, not pay two mapInPandas scans).
+    Inject ``decoder`` as ``decoder(blob, id) -> (width, height,
+    channels)`` and ``pixels`` as in ``phash64``; the band votes are
+    the SAME helper ``phash64`` runs, so the two cannot diverge."""
     dec = decoder or fake_image_meta
     px = pixels or fake_pixels
 
@@ -410,55 +382,179 @@ def phash_pairs(
 JPEG_WALK_STEPS = 12
 
 
-def _hx_byte(hx, pos):
-    """Byte value at 1-indexed byte position ``pos`` of the hex-encoded
-    payload column ``hx`` (out-of-range reads 0 via the lpad guard —
-    keeps ANSI conv() off empty strings)."""
-    return F.conv(
-        F.lpad(F.substring(hx, pos * 2 - 1, F.lit(2)), 2, "0"), 16, 10
-    ).cast("long")
+def _codegen_barrier(df: DataFrame, tag: str) -> DataFrame:
+    """1:1 ``explode(array(1))`` Generate that stops CollapseProject
+    from fusing adjacent walk stages into one Project: the full r11
+    container-walk column set in a single Project generated a
+    doConsume past Janino's 64 KB method limit, and the WHOLE stage
+    silently fell back to interpreted execution (ERROR CodeGenerator;
+    the census sweep row ballooned to ~20 s). Splitting the stages
+    keeps every generated method small enough to compile. Each stage's
+    walk positions/flags are already materialized as columns, so
+    nothing is recomputed across the barrier, and the Generate itself
+    is whole-stage-codegen'd and row-neutral.
+
+    The int-1 ``tag`` column is deliberately KEPT (r12): every Dataset
+    transformation triggers an eager analyzer pass over the whole
+    accumulated plan, so the old ``.drop(tag)`` doubled the barrier's
+    DRIVER-side cost on the deep census plans (~80 ms per op at 60+
+    ops) for zero benefit — callers end in an explicit select that
+    never carries the tags."""
+    return df.withColumn(tag, F.explode(F.array(F.lit(1))))
 
 
-def _hx_pair(hx, pos):
-    """One hex byte-pair at byte position ``pos``, zero-filled when the
-    read runs past the payload end (rpad: a missing TRAILING byte reads
-    as 0, matching the per-byte lpad-guard semantics)."""
-    return F.rpad(F.substring(hx, pos * 2 - 1, F.lit(2)), 2, "0")
+# --- Byte readers (``_sx_*``) and hex writers (``_shex*``): the only
+# byte codec of the sniffers and fixture synthesizers below. They
+# return SQL STRINGS, applied with one ``F.expr`` / ``selectExpr`` entry
+# per output column, because the unrolled walks build THOUSANDS of tiny
+# expressions and EVERY Column operator call is a py4j socket roundtrip
+# (~0.45 ms): built as Columns, one container-census plan cost 10.6k
+# roundtrips, ~4 s of driver build per plan (bench passes rebuild
+# plans, so that is real wall per pass). The SQL parser builds the same
+# Catalyst operators JVM-side in one roundtrip per column. Positions
+# and values are SQL sub-expressions (a column name or parenthesized
+# arithmetic); every helper parenthesizes its inputs. Readers take
+# 1-indexed byte positions into the hex-payload column ``_hx`` each
+# sniffer materializes first; the container walks also read ``_nb``,
+# its octet length.
+
+def _sx_str4(pos: str) -> str:
+    """Hex of the 4 bytes at 1-indexed byte position ``pos``."""
+    return f"substring(_hx, ({pos}) * 2 - 1, 8)"
 
 
-def _hx_be16(hx, pos):
+def _sx_byte(pos: str) -> str:
+    """Byte value at ``pos``; a read past the payload end is 0 (the
+    lpad guard also keeps ANSI conv() off empty strings)."""
+    return (
+        f"CAST(conv(lpad(substring(_hx, ({pos}) * 2 - 1, 2), 2, '0'),"
+        " 16, 10) AS BIGINT)"
+    )
+
+
+def _sx_pair(pos: str) -> str:
+    """One hex byte-pair at ``pos``, zero-filled when the read runs past
+    the payload end (rpad: a missing TRAILING byte reads as 0)."""
+    return f"rpad(substring(_hx, ({pos}) * 2 - 1, 2), 2, '0')"
+
+
+def _sx_be16(pos: str) -> str:
     # one substring + one conv instead of per-byte assembly: the walk
     # columns' expression count drove generated-source size past
     # Janino's 64 KB method limit in r11 (see _codegen_barrier); rpad
     # zero-fills past-end reads at the TAIL, same as byte-wise reads
-    return F.conv(
-        F.rpad(F.substring(hx, pos * 2 - 1, F.lit(4)), 4, "0"), 16, 10
-    ).cast("long")
+    return (
+        f"CAST(conv(rpad(substring(_hx, ({pos}) * 2 - 1, 4), 4, '0'),"
+        " 16, 10) AS BIGINT)"
+    )
 
 
-def _hx_be32(hx, pos):
-    return F.conv(
-        F.rpad(F.substring(hx, pos * 2 - 1, F.lit(8)), 8, "0"), 16, 10
-    ).cast("long")
+def _sx_be32(pos: str) -> str:
+    return (
+        f"CAST(conv(rpad(substring(_hx, ({pos}) * 2 - 1, 8), 8, '0'),"
+        " 16, 10) AS BIGINT)"
+    )
 
 
-def _hx_le16(hx, pos):
-    return F.conv(
-        F.concat(_hx_pair(hx, pos + 1), _hx_pair(hx, pos)), 16, 10
-    ).cast("long")
+def _sx_le16(pos: str) -> str:
+    return (
+        f"CAST(conv(concat({_sx_pair(f'({pos}) + 1')}, {_sx_pair(pos)}),"
+        " 16, 10) AS BIGINT)"
+    )
 
 
-def _hx_le32(hx, pos):
-    return F.conv(
-        F.concat(
-            _hx_pair(hx, pos + 3),
-            _hx_pair(hx, pos + 2),
-            _hx_pair(hx, pos + 1),
-            _hx_pair(hx, pos),
-        ),
-        16,
-        10,
-    ).cast("long")
+def _sx_le32(pos: str) -> str:
+    return (
+        "CAST(conv(concat("
+        f"{_sx_pair(f'({pos}) + 3')}, {_sx_pair(f'({pos}) + 2')}, "
+        f"{_sx_pair(f'({pos}) + 1')}, {_sx_pair(pos)}), 16, 10) AS BIGINT)"
+    )
+
+
+def _sx_idiv(num: str, den: str) -> str:
+    """Exact nonnegative-long integer division: num - num%den is an
+    exact multiple of den, and an IEEE double division whose operands
+    and quotient are all exactly-representable integers (< 2^53 here:
+    num <= 2^32 * 10^6 ~ 4.3e15) returns the quotient EXACTLY, so the
+    cast back to long is lossless — unlike FLOOR(num/den), whose
+    0.5-ulp rounding at ~1e15 magnitudes can cross an integer boundary
+    on hostile header values."""
+    return f"CAST(((({num}) - (({num}) % ({den}))) / ({den})) AS BIGINT)"
+
+
+def _sx_stage(cur, cols: dict[str, str]):
+    """Apply one walk-stage projection from SQL-string expressions —
+    ONE py4j roundtrip per column plus one Dataset op, instead of one
+    roundtrip per Column operator. Uses ``selectExpr("*", ...)`` so a
+    later entry may reference an earlier entry's alias LATERALLY
+    (spark.sql.lateralColumnAlias, on by default since 3.4): chained
+    walk steps merge into one projection, halving the eager analyzer
+    passes a deep census plan pays per Dataset op (rule 9b)."""
+    return cur.selectExpr("*", *(f"{v} AS {k}" for k, v in cols.items()))
+
+
+def _sx_walk(
+    cur,
+    tag: str,
+    steps: int,
+    init: dict[str, str],
+    step: Callable[[int], dict[str, str]],
+):
+    """Apply an unrolled ``steps``-step byte walk: ``init`` holds the
+    walk's starting columns and ``step(k)`` returns step k's columns,
+    all SQL strings. The rhythm every walk here shares: ONE
+    ``_sx_stage`` per PAIR of steps (the pair's second step reads the
+    first's columns laterally, so both resolve in one analyzer pass;
+    ``init`` folds into the first pair), then a ``_codegen_barrier``
+    tagged ``_<tag>bar<k>``, so each generated method covers ~2 steps
+    and stays under Janino's 64 KB limit (CLAUDE.md rule 10)."""
+    cols = dict(init)
+    for k in range(steps):
+        cols.update(step(k))
+        if k % 2 == 1 or k == steps - 1:
+            cur = _sx_stage(cur, cols)
+            cols = {}
+        if k % 2 == 1:
+            cur = _codegen_barrier(cur, f"_{tag}bar{k}")
+    return cur
+
+
+# Writers: the nonnegative integer value ``c`` as fixed-width hex, big-
+# or little-endian. Every le writer is FULL width: one that assumes zero
+# high bytes silently truncates larger values (VERDICT r10 #8).
+
+def _shex2(c: str) -> str:
+    return f"lpad(hex(CAST(({c}) AS BIGINT)), 2, '0')"
+
+
+def _shex_be16(c: str) -> str:
+    return f"lpad(hex(CAST(({c}) AS BIGINT)), 4, '0')"
+
+
+def _shex_be32(c: str) -> str:
+    return f"lpad(hex(CAST(({c}) AS BIGINT)), 8, '0')"
+
+
+def _shex_le16(c: str) -> str:
+    return (
+        f"concat({_shex2(f'({c}) % 256')}, "
+        f"{_shex2(f'FLOOR(({c}) / 256)')})"
+    )
+
+
+def _shex_le24(c: str) -> str:
+    return (
+        f"concat({_shex2(f'({c}) % 256')}, "
+        f"{_shex2(f'FLOOR(({c}) / 256) % 256')}, "
+        f"{_shex2(f'FLOOR(({c}) / 65536) % 256')})"
+    )
+
+
+def _shex_le32(c: str) -> str:
+    return (
+        f"concat({_shex_le16(f'({c}) % 65536')}, "
+        f"{_shex_le16(f'FLOOR(({c}) / 65536)')})"
+    )
 
 
 def sniff_image_meta(
@@ -486,110 +582,82 @@ def sniff_image_meta(
     payload is materialized ONCE as a top-level projection (PLANS.md
     rule 1) and every per-step walk position/flag is its own projection
     column so codegen subexpression elimination applies; the whole
-    operator is joins-free, shuffle-free, UDF-free.
+    operator is joins-free, shuffle-free, UDF-free. Expressions are SQL
+    strings built from the ``_sx_*`` readers, as in
+    sniff_container_meta.
     """
     blobs = df if "blob" in df.columns else attach_blob(df)
     cur = blobs.select(F.col(id_col), "blob").withColumn(
         "_hx", F.hex("blob")
     )
-    hx = F.col("_hx")
-
     fmt = (
-        F.when(F.substring(hx, 1, 16) == "89504E470D0A1A0A", "png")
-        .when(F.substring(hx, 1, 4) == "FFD8", "jpeg")
-        .when(
-            F.substring(hx, 1, 12).isin("474946383961", "474946383761"),
-            "gif",
-        )
-        .when(F.substring(hx, 1, 4) == "424D", "bmp")
-        .otherwise("unknown")
+        "CASE WHEN substring(_hx, 1, 16) = '89504E470D0A1A0A' THEN 'png'"
+        " WHEN substring(_hx, 1, 4) = 'FFD8' THEN 'jpeg'"
+        " WHEN substring(_hx, 1, 12) IN ('474946383961', '474946383761')"
+        " THEN 'gif'"  # GIF89a / GIF87a
+        " WHEN substring(_hx, 1, 4) = '424D' THEN 'bmp'"
+        " ELSE 'unknown' END"
     )
-    cur = cur.withColumn("_fmt", fmt)
 
     # JPEG marker-segment walk, unrolled: _p{k} is the byte position of
-    # the k-th marker, _sof{k} whether it is a frame header. Non-JPEG
-    # rows compute harmless garbage that the final CASE never reads.
-    cur = cur.withColumn("_p0", F.lit(3).cast("long"))
-    for k in range(jpeg_steps):
-        p = F.col(f"_p{k}")
-        b1 = _hx_byte(hx, p + 1)
-        cur = cur.withColumn(
-            f"_sof{k}",
-            (_hx_byte(hx, p) == 255) & (b1 >= 192) & (b1 <= 195),
-        )
-        if k + 1 < jpeg_steps:
-            cur = cur.withColumn(
-                f"_p{k + 1}",
-                F.when(F.col(f"_sof{k}"), p).otherwise(
-                    p + 2 + _hx_be16(hx, p + 2)
-                ),
+    # the k-th marker, _sof{k} whether it is a frame header. The start
+    # is GATED on the format, as the container walks gate theirs: a
+    # NULL start short-circuits every read on non-JPEG rows, and the
+    # final CASE never reads the JPEG columns for other formats.
+    def jpeg_step(k: int) -> dict[str, str]:
+        p = f"_p{k}"
+        b1 = _sx_byte(f"({p}) + 1")
+        cols = {
+            f"_sof{k}": (
+                f"(({_sx_byte(p)}) = 255) AND (({b1}) >= 192)"
+                f" AND (({b1}) <= 195)"
             )
-    jpeg_h = F.coalesce(
-        *[
-            F.when(F.col(f"_sof{k}"), _hx_be16(hx, F.col(f"_p{k}") + 5))
+        }
+        if k + 1 < jpeg_steps:
+            cols[f"_p{k + 1}"] = (
+                f"CASE WHEN _sof{k} THEN {p}"
+                f" ELSE ({p}) + 2 + ({_sx_be16(f'({p}) + 2')}) END"
+            )
+        return cols
+
+    jpeg_start = {
+        "_fmt": fmt,
+        "_p0": "CAST(CASE WHEN _fmt = 'jpeg' THEN 3 END AS BIGINT)",
+    }
+    cur = _sx_walk(cur, "j", jpeg_steps, jpeg_start, jpeg_step)
+
+    def jpeg_dim(off: int) -> str:  # be16 at SOF+5 (height), SOF+7 (width)
+        return "COALESCE(" + ", ".join(
+            f"CASE WHEN _sof{k} THEN {_sx_be16(f'_p{k} + {off}')} END"
             for k in range(jpeg_steps)
-        ]
-    )
-    jpeg_w = F.coalesce(
-        *[
-            F.when(F.col(f"_sof{k}"), _hx_be16(hx, F.col(f"_p{k}") + 7))
-            for k in range(jpeg_steps)
-        ]
-    )
+        ) + ")"
 
     width = (
-        F.when(F.col("_fmt") == "png", _hx_be32(hx, F.lit(17)))
-        .when(F.col("_fmt") == "jpeg", jpeg_w)
-        .when(F.col("_fmt") == "gif", _hx_le16(hx, F.lit(7)))
-        .when(F.col("_fmt") == "bmp", _hx_le32(hx, F.lit(19)))
+        f"CASE WHEN _fmt = 'png' THEN {_sx_be32('17')}"
+        f" WHEN _fmt = 'jpeg' THEN {jpeg_dim(7)}"
+        f" WHEN _fmt = 'gif' THEN {_sx_le16('7')}"
+        f" WHEN _fmt = 'bmp' THEN {_sx_le32('19')} END"
     )
     height = (
-        F.when(F.col("_fmt") == "png", _hx_be32(hx, F.lit(21)))
-        .when(F.col("_fmt") == "jpeg", jpeg_h)
-        .when(F.col("_fmt") == "gif", _hx_le16(hx, F.lit(9)))
-        .when(F.col("_fmt") == "bmp", _hx_le32(hx, F.lit(23)))
+        f"CASE WHEN _fmt = 'png' THEN {_sx_be32('21')}"
+        f" WHEN _fmt = 'jpeg' THEN {jpeg_dim(5)}"
+        f" WHEN _fmt = 'gif' THEN {_sx_le16('9')}"
+        f" WHEN _fmt = 'bmp' THEN {_sx_le32('23')} END"
     )
     # try_cast, not cast: arbitrary crawled bytes can put >= 2^31 at a
     # dim offset (e.g. a spec-legal top-down BMP stores biHeight as a
     # NEGATIVE two's-complement le32) — ANSI cast would crash the whole
     # census job on one such payload; null dims route it instead
-    w_i = width.try_cast("int")
-    h_i = height.try_cast("int")
-    return cur.select(
-        F.col(id_col),
-        F.col("_fmt").alias("format"),
-        w_i.alias("width"),
-        h_i.alias("height"),
-        (w_i.isNotNull() & h_i.isNotNull()).alias("dims_parsed"),
-        F.octet_length("blob").cast("long").alias("n_bytes"),
+    w_i = f"try_cast(({width}) AS INT)"
+    h_i = f"try_cast(({height}) AS INT)"
+    return cur.selectExpr(
+        f"`{id_col}`",
+        "_fmt AS format",
+        f"{w_i} AS width",
+        f"{h_i} AS height",
+        f"(({w_i}) IS NOT NULL AND ({h_i}) IS NOT NULL) AS dims_parsed",
+        "CAST(octet_length(blob) AS BIGINT) AS n_bytes",
     )
-
-
-def _hex2(c):
-    return F.lpad(F.hex(c.cast("bigint")), 2, "0")
-
-
-def _hex_be16(c):
-    return F.lpad(F.hex(c.cast("bigint")), 4, "0")
-
-
-def _hex_be32(c):
-    return F.lpad(F.hex(c.cast("bigint")), 8, "0")
-
-
-def _hex_le16(c):
-    return F.concat(_hex2(c % 256), _hex2(F.floor(c / 256)))
-
-
-def _hex_le32(c):
-    # FULL 4-byte writer since the r11 constants audit (VERDICT r10 #8):
-    # the old "<2^16 dims" two-high-bytes-zero shortcut silently
-    # truncated larger values — the exact trap that corrupted the first
-    # cut of the r10 container fixture — and the full form writes
-    # identical bytes for everything the image fixture produces, so
-    # there is no truncating writer left for a future fixture edit to
-    # trip on
-    return F.concat(_hex_le16(c % 65536), _hex_le16(F.floor(c / 65536)))
 
 
 def synth_image_blob(
@@ -623,65 +691,63 @@ def synth_image_blob(
     counts in n_unparsed; both regimes are stated arithmetically in
     the oracle, so neither a walk bug nor a silent drop can cancel.
     """
-    i = F.col(id_col)
-    w = (F.lit(16) + i % 240).cast("long")
-    h = (F.lit(16) + F.floor(i / 4) % 224).cast("long")
-    pl = (F.lit(10) + F.col(len_col) % 100).cast("int")
-    filler = F.repeat(F.lit("00"), pl)
-    l0 = (F.lit(16) + i % 8).cast("long")  # APP0 length (incl. itself)
-    l1 = (F.lit(4) + i % 5).cast("long")  # COM length (incl. itself)
-    n_extra = (i % 16).cast("int")  # extra 4-byte empty COM segments
+    # ONE string expression handed to a single F.expr, built from the
+    # _shex* writers like synth_container_blob
+    i = f"`{id_col}`"
+    w = f"CAST(16 + ({i}) % 240 AS BIGINT)"
+    h = f"CAST(16 + FLOOR(({i}) / 4) % 224 AS BIGINT)"
+    filler = f"repeat('00', CAST(10 + (`{len_col}`) % 100 AS INT))"
+    l0 = f"CAST(16 + ({i}) % 8 AS BIGINT)"  # APP0 length (incl. itself)
+    l1 = f"CAST(4 + ({i}) % 5 AS BIGINT)"  # COM length (incl. itself)
+    n_extra = f"CAST(({i}) % 16 AS INT)"  # extra 4-byte empty COM segments
 
-    png = F.concat(
-        F.lit("89504E470D0A1A0A"),  # signature
-        F.lit("0000000D49484452"),  # IHDR length 13 + type
-        _hex_be32(w),
-        _hex_be32(h),
-        F.lit("0806000000"),  # bit depth 8, RGBA, default methods
-        filler,
+    png = (
+        "concat("
+        "'89504E470D0A1A0A', "  # signature
+        "'0000000D49484452', "  # IHDR length 13 + type
+        f"{_shex_be32(w)}, {_shex_be32(h)}, "
+        "'0806000000', "  # bit depth 8, RGBA, default methods
+        f"{filler})"
     )
-    jpeg = F.concat(
-        F.lit("FFD8"),  # SOI
-        F.lit("FFE0"),
-        _hex_be16(l0),
-        F.repeat(F.lit("00"), (l0 - 2).cast("int")),  # APP0 body
-        F.lit("FFFE"),
-        _hex_be16(l1),
-        F.repeat(F.lit("00"), (l1 - 2).cast("int")),  # COM body
-        F.repeat(F.lit("FFFE0002"), n_extra),  # deep preface (see above)
-        F.lit("FFC0"),
-        F.lit("0011"),  # SOF0, length 17
-        F.lit("08"),  # precision
-        _hex_be16(h),
-        _hex_be16(w),
-        F.lit("03"),  # 3 components
-        F.lit("011100021100031100"),  # component specs
-        F.lit("FFD9"),  # EOI
-        filler,
+    jpeg = (
+        "concat("
+        "'FFD8', "  # SOI
+        f"'FFE0', {_shex_be16(l0)}, "
+        f"repeat('00', CAST(({l0}) - 2 AS INT)), "  # APP0 body
+        f"'FFFE', {_shex_be16(l1)}, "
+        f"repeat('00', CAST(({l1}) - 2 AS INT)), "  # COM body
+        f"repeat('FFFE0002', {n_extra}), "  # deep preface (see above)
+        "'FFC0', '0011', "  # SOF0, length 17
+        "'08', "  # precision
+        f"{_shex_be16(h)}, {_shex_be16(w)}, "
+        "'03', "  # 3 components
+        "'011100021100031100', "  # component specs
+        "'FFD9', "  # EOI
+        f"{filler})"
     )
-    gif = F.concat(
-        F.lit("474946383961"),  # GIF89a
-        _hex_le16(w),
-        _hex_le16(h),
-        filler,
+    gif = (
+        "concat('474946383961', "  # GIF89a
+        f"{_shex_le16(w)}, {_shex_le16(h)}, {filler})"
     )
-    bmp = F.concat(
-        F.lit("424D"),  # BM
-        F.lit("00000000"),  # file size (unused by the parser)
-        F.lit("00000000"),  # reserved
-        F.lit("36000000"),  # pixel-data offset
-        F.lit("28000000"),  # DIB header size 40
-        _hex_le32(w),
-        _hex_le32(h),
-        filler,
+    bmp = (
+        "concat("
+        "'424D', "  # BM
+        "'00000000', "  # file size (unused by the parser)
+        "'00000000', "  # reserved
+        "'36000000', "  # pixel-data offset
+        "'28000000', "  # DIB header size 40
+        f"{_shex_le32(w)}, {_shex_le32(h)}, "
+        f"{filler})"
     )
     blob_hex = (
-        F.when(i % 4 == 0, png)
-        .when(i % 4 == 1, jpeg)
-        .when(i % 4 == 2, gif)
-        .otherwise(bmp)
+        f"CASE WHEN ({i}) % 4 = 0 THEN {png}"
+        f" WHEN ({i}) % 4 = 1 THEN {jpeg}"
+        f" WHEN ({i}) % 4 = 2 THEN {gif}"
+        f" ELSE {bmp} END"
     )
-    return df.select(F.col(id_col), F.unhex(blob_hex).alias("blob"))
+    return df.select(
+        F.col(id_col), F.expr(f"unhex({blob_hex})").alias("blob")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -729,119 +795,6 @@ MINF_WALK_STEPS = 3
 STBL_WALK_STEPS = 2
 
 
-def _hx_str4(hx, pos):
-    """Hex of the 4 bytes at 1-indexed byte position ``pos``."""
-    return F.substring(hx, pos * 2 - 1, F.lit(8))
-
-
-def _codegen_barrier(df: DataFrame, tag: str) -> DataFrame:
-    """1:1 ``explode(array(1))`` Generate that stops CollapseProject
-    from fusing adjacent walk stages into one Project: the full r11
-    container-walk column set in a single Project generated a
-    doConsume past Janino's 64 KB method limit, and the WHOLE stage
-    silently fell back to interpreted execution (ERROR CodeGenerator;
-    the census sweep row ballooned to ~20 s). Splitting the stages
-    keeps every generated method small enough to compile. Each stage's
-    walk positions/flags are already materialized as columns, so
-    nothing is recomputed across the barrier, and the Generate itself
-    is whole-stage-codegen'd and row-neutral.
-
-    The int-1 ``tag`` column is deliberately KEPT (r12): every Dataset
-    transformation triggers an eager analyzer pass over the whole
-    accumulated plan, so the old ``.drop(tag)`` doubled the barrier's
-    DRIVER-side cost on the deep census plans (~80 ms per op at 60+
-    ops) for zero benefit — callers end in an explicit select that
-    never carries the tags."""
-    return df.withColumn(tag, F.explode(F.array(F.lit(1))))
-
-
-def _idiv(num, den):
-    """Exact nonnegative-long integer division as columns: num - num%den
-    is an exact multiple of den, and an IEEE double division whose
-    operands and quotient are all exactly-representable integers
-    (< 2^53 here: num <= 2^32 * 10^6 ~ 4.3e15) returns the quotient
-    EXACTLY, so the cast back to long is lossless — unlike
-    floor(num/den), whose 0.5-ulp rounding at ~1e15 magnitudes can
-    cross an integer boundary on hostile header values."""
-    return ((num - num % den) / den).cast("long")
-
-
-# --- SQL-string expression builders for the container walks (r16,
-# DRIVER-side build cost: VERDICT r15 #4 / PLANS.md rule 9).
-# The unrolled container walks build THOUSANDS of tiny Column ops, and
-# EVERY Column operator call is a py4j socket roundtrip (~0.45 ms):
-# profiled at 10.6k roundtrips = ~4 s of driver build time per census
-# plan (bench passes rebuild plans, so that is real wall per pass in
-# the sweep's build+exec row). These helpers build the SAME expressions
-# as the ``_hx_*`` Column helpers above but as SQL STRINGS, applied
-# with one ``F.expr`` per output column — the SQL parser constructs the
-# identical Catalyst operators JVM-side, cutting the roundtrip count
-# ~40x. Positions are SQL sub-expressions (a column name or
-# parenthesized arithmetic); every helper parenthesizes its inputs.
-# ``_hx``/``_nb`` are the hex-payload / octet-length columns
-# materialized at the head of ``sniff_container_meta``.
-
-def _sx_str4(pos: str) -> str:
-    """Hex of the 4 bytes at 1-indexed byte position ``pos``."""
-    return f"substring(_hx, ({pos}) * 2 - 1, 8)"
-
-
-def _sx_byte(pos: str) -> str:
-    return (
-        f"CAST(conv(lpad(substring(_hx, ({pos}) * 2 - 1, 2), 2, '0'),"
-        " 16, 10) AS BIGINT)"
-    )
-
-
-def _sx_pair(pos: str) -> str:
-    return f"rpad(substring(_hx, ({pos}) * 2 - 1, 2), 2, '0')"
-
-
-def _sx_be16(pos: str) -> str:
-    return (
-        f"CAST(conv(rpad(substring(_hx, ({pos}) * 2 - 1, 4), 4, '0'),"
-        " 16, 10) AS BIGINT)"
-    )
-
-
-def _sx_be32(pos: str) -> str:
-    return (
-        f"CAST(conv(rpad(substring(_hx, ({pos}) * 2 - 1, 8), 8, '0'),"
-        " 16, 10) AS BIGINT)"
-    )
-
-
-def _sx_le16(pos: str) -> str:
-    return (
-        f"CAST(conv(concat({_sx_pair(f'({pos}) + 1')}, {_sx_pair(pos)}),"
-        " 16, 10) AS BIGINT)"
-    )
-
-
-def _sx_le32(pos: str) -> str:
-    return (
-        "CAST(conv(concat("
-        f"{_sx_pair(f'({pos}) + 3')}, {_sx_pair(f'({pos}) + 2')}, "
-        f"{_sx_pair(f'({pos}) + 1')}, {_sx_pair(pos)}), 16, 10) AS BIGINT)"
-    )
-
-
-def _sx_idiv(num: str, den: str) -> str:
-    """String form of :func:`_idiv` (same exact-integer discipline)."""
-    return f"CAST(((({num}) - (({num}) % ({den}))) / ({den})) AS BIGINT)"
-
-
-def _sx_stage(cur, cols: dict[str, str]):
-    """Apply one walk-stage projection from SQL-string expressions —
-    ONE py4j roundtrip per column plus one Dataset op, instead of one
-    roundtrip per Column operator. Uses ``selectExpr("*", ...)`` so a
-    later entry may reference an earlier entry's alias LATERALLY
-    (spark.sql.lateralColumnAlias, on by default since 3.4): chained
-    walk steps merge into one projection, halving the eager analyzer
-    passes a deep census plan pays per Dataset op (rule 9b)."""
-    return cur.selectExpr("*", *(f"{v} AS {k}" for k, v in cols.items()))
-
-
 def _box_child_walk(cur, prefix, parent_pos, parent_size, steps, pre=None):
     """Unrolled walk over the CHILD boxes of a parent at 1-indexed byte
     position ``parent_pos`` with resolved byte size ``parent_size``:
@@ -855,46 +808,36 @@ def _box_child_walk(cur, prefix, parent_pos, parent_size, steps, pre=None):
     stops the walk and downstream reads stay loud-NULL. A NULL parent
     (not found upstream) walks NULL positions into NULL types. Clamps
     mirror the top-level walk: a garbage child size cannot push a
-    position past ``n_bytes + 8`` (substring int-overflow guard), and
-    an intra-walk ``_codegen_barrier`` every 2 steps keeps each
-    generated method under Janino's 64 KB limit (CLAUDE.md rule 10)."""
-    # ONE withColumns projection per walk step (r12): a withColumn
-    # CHAIN makes the analyzer re-walk the whole accumulated plan per
-    # call — at ~90 projections the census paid ~10 s of DRIVER time
-    # per plan build. cok is inlined into the next-position expression
-    # (cheap comparisons; the expensive conv(substring) reads stay
-    # top-level aliases for codegen subexpression elimination).
-    # Expressions are SQL strings since r16 (see the _sx_* helpers:
-    # the py4j-roundtrip cost of building them as Columns dominated
-    # the census's driver build). ``parent_pos``/``parent_size`` are
-    # SQL sub-expressions; the strings read the materialized
-    # ``_hx``/``_nb`` columns directly.
-    # one _sx_stage per barrier-bounded PAIR of steps (r16): the pair's
-    # second step references the first step's position LATERALLY, so
-    # both resolve in a single analyzer pass; ``pre`` lets a caller
-    # fold its parent-found projection into the same pass.
-    cols: dict[str, str] = dict(pre or {})
-    cols[f"_{prefix}end"] = f"least(({parent_pos}) + ({parent_size}) - 1, _nb)"
-    cols[f"_{prefix}p0"] = f"({parent_pos}) + 8"
-    for k in range(steps):
+    position past ``n_bytes + 8`` (substring int-overflow guard). The
+    steps run through ``_sx_walk`` (a codegen barrier every 2 steps)."""
+    # cok is inlined into the next-position expression (cheap
+    # comparisons; the expensive conv(substring) reads stay top-level
+    # aliases for codegen subexpression elimination). ``parent_pos`` /
+    # ``parent_size`` are SQL sub-expressions; ``pre`` lets a caller
+    # fold its parent-found projection into the walk's first stage.
+    def step(k: int) -> dict[str, str]:
         p = f"_{prefix}p{k}"
         csz = _sx_be32(p)
         cok = f"(({p}) + 7 <= _{prefix}end) AND (({csz}) >= 8)"
-        cols[f"_{prefix}ok{k}"] = cok
-        cols[f"_{prefix}ty{k}"] = (
-            f"CASE WHEN {cok} THEN {_sx_str4(f'({p}) + 4')} END"
-        )
+        cols = {
+            f"_{prefix}ok{k}": cok,
+            f"_{prefix}ty{k}": (
+                f"CASE WHEN {cok} THEN {_sx_str4(f'({p}) + 4')} END"
+            ),
+        }
         if k + 1 < steps:
             cols[f"_{prefix}p{k + 1}"] = (
                 f"CASE WHEN {cok} THEN least(({p}) + ({csz}), _nb + 8) "
                 "ELSE _nb + 8 END"
             )
-        if k % 2 == 1 or k == steps - 1:
-            cur = _sx_stage(cur, cols)
-            cols = {}
-        if k % 2 == 1:  # intra-walk barrier: ~2 steps per codegen method
-            cur = _codegen_barrier(cur, f"_{prefix}bar{k}")
-    return cur
+        return cols
+
+    init = {
+        **(pre or {}),
+        f"_{prefix}end": f"least(({parent_pos}) + ({parent_size}) - 1, _nb)",
+        f"_{prefix}p0": f"({parent_pos}) + 8",
+    }
+    return _sx_walk(cur, prefix, steps, init, step)
 
 
 def _box_child_found(prefix: str, steps: int, fourcc_hex: str) -> str:
@@ -1002,31 +945,27 @@ def sniff_container_meta(
     # before the substring/conv work), so the wav walk costs nothing
     # on the ~3/4 of rows that aren't wav — same outputs (the final
     # CASE never reads wav columns elsewhere), ~free rows elsewhere
-    # one projection per barrier-bounded PAIR of steps (r16 lateral
-    # aliases, see _sx_stage): the analyzer re-walks the accumulated
-    # plan on every Dataset op, so fewer/wider ops cost less driver
-    # time on deep walks
-    wcols = {"_wp0": "CAST(CASE WHEN _ctr = 'wav' THEN 13 END AS BIGINT)"}
-    for k in range(wav_steps):
+    def wav_step(k: int) -> dict[str, str]:
         p = f"_wp{k}"
-        wcols[f"_wfmt{k}"] = (  # 'fmt '
-            f"({_sx_str4(p)} = '666D7420') AND (({p}) + 23 <= _nb)"
-        )
-        wcols[f"_wdat{k}"] = f"{_sx_str4(p)} = '64617461'"  # 'data'
+        cols = {
+            f"_wfmt{k}": (  # 'fmt '
+                f"({_sx_str4(p)} = '666D7420') AND (({p}) + 23 <= _nb)"
+            ),
+            f"_wdat{k}": f"{_sx_str4(p)} = '64617461'",  # 'data'
+        }
         if k + 1 < wav_steps:
             sz = _sx_le32(f"({p}) + 4")
             # clamp: on non-RIFF bytes the le32 "size" is garbage up to
             # 2^32-1, and an unclamped position overflows substring's
             # int argument (ANSI CAST_OVERFLOW kills the job); past-end
             # positions all behave identically (lpad-guarded zero reads)
-            wcols[f"_wp{k + 1}"] = (
+            cols[f"_wp{k + 1}"] = (
                 f"least(({p}) + 8 + ({sz}) + (({sz}) % 2), _nb + 8)"
             )
-        if k % 2 == 1 or k == wav_steps - 1:
-            cur = _sx_stage(cur, wcols)
-            wcols = {}
-        if k % 2 == 1:  # intra-walk barrier: ~2 steps per codegen method
-            cur = _codegen_barrier(cur, f"_wbar{k}")
+        return cols
+
+    wav_start = {"_wp0": "CAST(CASE WHEN _ctr = 'wav' THEN 13 END AS BIGINT)"}
+    cur = _sx_walk(cur, "w", wav_steps, wav_start, wav_step)
     wav_rate = "COALESCE(" + ", ".join(
         f"CASE WHEN _wfmt{k} THEN {_sx_le32(f'_wp{k} + 12')} END"
         for k in range(wav_steps)
@@ -1105,8 +1044,7 @@ def sniff_container_meta(
     # only for the last box — counted, then the walk stops).
     # same container gate as the wav walk: NULL start = free non-mp4
     # rows (the descent below then short-circuits through NULL moov)
-    bcols = {"_bp0": "CAST(CASE WHEN _ctr = 'mp4' THEN 1 END AS BIGINT)"}
-    for k in range(mp4_steps):
+    def box_step(k: int) -> dict[str, str]:
         p = f"_bp{k}"
         sz32 = _sx_be32(p)
         # 64-bit largesize: gate the high dword BEFORE any arithmetic —
@@ -1126,23 +1064,22 @@ def sniff_container_meta(
         )
         min_sz = f"CASE WHEN ({sz32}) = 1 THEN 16 ELSE 8 END"
         ok = f"(({p}) + 7 <= _nb) AND (({sz}) >= ({min_sz}))"
-        bcols[f"_bok{k}"] = ok
-        bcols[f"_bty{k}"] = (
-            f"CASE WHEN {ok} THEN {_sx_str4(f'({p}) + 4')} END"
-        )
-        bcols[f"_bsz{k}"] = f"CASE WHEN {ok} THEN {sz} END"
+        cols = {
+            f"_bok{k}": ok,
+            f"_bty{k}": f"CASE WHEN {ok} THEN {_sx_str4(f'({p}) + 4')} END",
+            f"_bsz{k}": f"CASE WHEN {ok} THEN {sz} END",
+        }
         if k + 1 < mp4_steps:
             # same clamp as the WAV walk: a garbage size of up to
             # 2^32-1 must not push the position past int range
-            bcols[f"_bp{k + 1}"] = (
+            cols[f"_bp{k + 1}"] = (
                 f"CASE WHEN {ok} THEN least(({p}) + ({sz}), _nb + 8)"
                 " ELSE _nb + 8 END"
             )
-        if k % 2 == 1 or k == mp4_steps - 1:
-            cur = _sx_stage(cur, bcols)  # one projection per step pair
-            bcols = {}
-        if k % 2 == 1:  # intra-walk barrier: ~2 steps per codegen method
-            cur = _codegen_barrier(cur, f"_bbar{k}")
+        return cols
+
+    box_start = {"_bp0": "CAST(CASE WHEN _ctr = 'mp4' THEN 1 END AS BIGINT)"}
+    cur = _sx_walk(cur, "b", mp4_steps, box_start, box_step)
     mp4_boxes = " + ".join(
         f"CAST(_bok{k} AS BIGINT)" for k in range(mp4_steps)
     )
@@ -1335,59 +1272,6 @@ def sniff_container_meta(
         " AS v_h",
         "CASE WHEN _ctr = 'mp4' THEN _mp4_codec END AS codec",
     )
-
-
-def _hex_le24(c):
-    return F.concat(_hex2(c % 256), _hex2(F.floor(c / 256) % 256),
-                    _hex2(F.floor(c / 65536) % 256))
-
-
-# --- SQL-string hex WRITERS (r16): synth_container_blob's Column-built
-# body cost ~0.7 s of py4j roundtrips per plan build (the _sx_* reader
-# rationale, writer side). Same expressions as the _hex* helpers above,
-# emitted as strings; `c` is a parenthesized SQL sub-expression.
-
-def _shex2(c: str) -> str:
-    return f"lpad(hex(CAST(({c}) AS BIGINT)), 2, '0')"
-
-
-def _shex_be16(c: str) -> str:
-    return f"lpad(hex(CAST(({c}) AS BIGINT)), 4, '0')"
-
-
-def _shex_be32(c: str) -> str:
-    return f"lpad(hex(CAST(({c}) AS BIGINT)), 8, '0')"
-
-
-def _shex_le16(c: str) -> str:
-    return (
-        f"concat({_shex2(f'({c}) % 256')}, "
-        f"{_shex2(f'FLOOR(({c}) / 256)')})"
-    )
-
-
-def _shex_le32(c: str) -> str:
-    # full 4-byte writer, same as _hex_le32 (VERDICT r10 #8)
-    return (
-        f"concat({_shex_le16(f'({c}) % 65536')}, "
-        f"{_shex_le16(f'FLOOR(({c}) / 65536)')})"
-    )
-
-
-def _shex_le24(c: str) -> str:
-    return (
-        f"concat({_shex2(f'({c}) % 256')}, "
-        f"{_shex2(f'FLOOR(({c}) / 256) % 256')}, "
-        f"{_shex2(f'FLOOR(({c}) / 65536) % 256')})"
-    )
-
-
-def _hex_le32f(c):
-    """Alias of :func:`_hex_le32`, retained from r10 when the image
-    writer truncated values >= 2^16 and containers needed a separate
-    full writer; since the r11 constants audit BOTH are the same full
-    4-byte little-endian writer (VERDICT r10 #8)."""
-    return _hex_le32(c)
 
 
 def synth_container_blob(

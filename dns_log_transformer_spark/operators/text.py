@@ -181,7 +181,7 @@ def sentences(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     # — Arrow's per-value conversion overhead dominates this small-row
     # 1->N workload. This is the registry's single documented
     # row-at-a-time Python exception (ROW_PYTHON_DOCUMENTED in the plan
-    # lint); pipelines use the pure-codegen sentences_fast twin below.
+    # lint).
     @udtf(returnType="sent_no: int, sentence: string")
     class SentenceSplit:
         def eval(self, text: str):
@@ -196,24 +196,6 @@ def sentences(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
 
     return df.lateralJoin(SentenceSplit(F.col(text_col).outer())).select(
         id_col, "sent_no", "sentence"
-    )
-
-
-def sentences_fast(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Hot-path twin of :func:`sentences`: identical output, pure codegen
-    (split -> trim -> filter -> posexplode), zero Python. Use this in
-    pipelines; the UDTF variant exists to exercise the table-function
-    surface. Equivalence is pinned in tests."""
-    segs = F.filter(
-        F.transform(F.split(F.col(text_col), r"\."), lambda s: F.trim(s)),
-        lambda s: F.length(s) > 0,
-    )
-    return (
-        df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col), F.posexplode(segs).alias("sent_no", "sentence"))
-        .select(id_col, F.col("sent_no").cast("int").alias("sent_no"), "sentence")
     )
 
 

@@ -11,16 +11,22 @@ Reproduced reference behavior:
   {requestId, timestamp} on accept (app/app.py:99-102); 400 with
   errorMessage on a non-JSON content type (app/app.py:69-74), a
   Content-Length that is not a non-negative integer (refused without
-  reading the body) or an unparseable body;
+  reading the body), an unparseable body, or a body that fails the
+  envelope schema (app/app.py:79,88-93) — the rule of
+  `transforms.envelope.envelope_validity_predicate`: a string
+  `requestId` and 1-10,000 `records`, each an object with a `data`
+  string of at most 1,365,336 chars. A rejected body never lands;
 - `GET /health` -> 200 (app/app.py:265-267).
 
 Deliberate upgrade (documented for parity review): the reference acks
 BEFORE processing and loses accepted records on crash (fire-and-forget
 executor.submit, app/app.py:96-102 — at-most-once). Here the ack happens
 AFTER fsync+rename of the landing file, and the stream's checkpoint
-replays unprocessed files — at-least-once end to end. Envelope/record
-*validation* stays in-pipeline (transforms/envelope.py, decode, validate)
-where rejects are quarantined as data, not just logged.
+replays unprocessed files — at-least-once end to end. Record
+*validation* stays in-pipeline (transforms/decode, validate) where
+rejects are quarantined as data, not just logged; the in-pipeline
+envelope predicate still guards files that reach the landing directory
+some other way.
 """
 
 from __future__ import annotations
@@ -32,6 +38,12 @@ import time
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from dns_log_transformer_spark.schemas import (
+    MAX_RECORD_DATA_CHARS,
+    MAX_RECORDS_PER_REQUEST,
+    MIN_RECORDS_PER_REQUEST,
+)
+
 
 #: CR and LF -> space, so each landed body is one line
 _ONE_LINE = bytes.maketrans(b"\r\n", b"  ")
@@ -39,6 +51,32 @@ _ONE_LINE = bytes.maketrans(b"\r\n", b"  ")
 
 def _now_ms() -> int:
     return int(time.time() * 1000)
+
+
+def _envelope_error(body) -> str | None:
+    """Why a parsed request body fails the Firehose envelope schema, or
+    None when it passes."""
+    if not isinstance(body, dict):
+        return "request body must be a JSON object"
+    if not isinstance(body.get("requestId"), str):
+        return "requestId must be a string"
+    records = body.get("records")
+    if not (
+        isinstance(records, list)
+        and MIN_RECORDS_PER_REQUEST <= len(records) <= MAX_RECORDS_PER_REQUEST
+    ):
+        return (
+            f"records must be a list of {MIN_RECORDS_PER_REQUEST} to "
+            f"{MAX_RECORDS_PER_REQUEST} records"
+        )
+    for r in records:
+        data = r.get("data") if isinstance(r, dict) else None
+        if not isinstance(data, str) or len(data) > MAX_RECORD_DATA_CHARS:
+            return (
+                "every record needs a data string of at most "
+                f"{MAX_RECORD_DATA_CHARS} characters"
+            )
+    return None
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -86,9 +124,12 @@ class _Handler(BaseHTTPRequestHandler):
         raw = self.rfile.read(int(length_header))
         try:
             body = json.loads(raw)
-            request_id = body.get("requestId", "unknown")
         except (json.JSONDecodeError, UnicodeDecodeError):
             self._reject("request body is not valid JSON")
+            return
+        error = _envelope_error(body)
+        if error is not None:
+            self._reject(error)
             return
         # land durably, THEN ack: tmp-write + fsync + atomic rename so the
         # file stream never sees a partial file and an acked batch is never
@@ -105,7 +146,7 @@ class _Handler(BaseHTTPRequestHandler):
             f.flush()
             os.fsync(f.fileno())
         os.rename(tmp, final)
-        self._send(200, {"requestId": request_id, "timestamp": _now_ms()})
+        self._send(200, {"requestId": body["requestId"], "timestamp": _now_ms()})
 
 
 class FirehoseReceiver:

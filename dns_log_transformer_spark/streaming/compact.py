@@ -5,7 +5,7 @@ shingle, anchor, span, pair tables).
 Why it exists, with numbers: every micro-batch appends or rewrites
 files inside the partitions it touches, so a long-lived store
 accumulates one-file-per-batch per touched partition. The r11
-two-decade winnow curve (tools/scale100_r11_sinks.py, PLANS.md)
+two-decade winnow curve (PLANS.md, "Sink two-decade curves")
 measured exactly this as the sinks' only per-batch growth term: an
 identical 500-doc probe drifted 9.44 -> 14.21 s as the index grew
 0.5k -> 50k docs across ~11 batches, and a control rebuild with 4x

@@ -748,7 +748,7 @@ def test_container_walks_handle_random_layouts(spark):
 
 
 def test_hex_readers_match_struct_semantics(spark):
-    """The r11 one-conv readers (be16/be32/le16/le32) must be
+    """The one-conv readers (byte/be16/be32/le16/le32) must be
     bit-equal to Python int.from_bytes over random payloads at random
     positions INCLUDING reads that run past the payload end, where the
     contract is zero-fill at the TAIL (a missing trailing byte reads as
@@ -761,10 +761,11 @@ def test_hex_readers_match_struct_semantics(spark):
     from pyspark.sql import functions as F
 
     from dns_log_transformer_spark.operators.multimodal import (
-        _hx_be16,
-        _hx_be32,
-        _hx_le16,
-        _hx_le32,
+        _sx_be16,
+        _sx_be32,
+        _sx_byte,
+        _sx_le16,
+        _sx_le32,
     )
 
     rng = random.Random(0x5EED)
@@ -781,23 +782,71 @@ def test_hex_readers_match_struct_semantics(spark):
         return int.from_bytes(chunk, order)
 
     df = spark.createDataFrame(rows, "i long, blob binary, pos int").select(
-        "i", "pos", F.hex("blob").alias("hx")
+        "i", "pos", F.hex("blob").alias("_hx")
     )
     got = {
-        r["i"]: (r["b16"], r["b32"], r["l16"], r["l32"])
+        r["i"]: (r["b8"], r["b16"], r["b32"], r["l16"], r["l32"])
         for r in df.select(
             "i",
-            _hx_be16(F.col("hx"), F.col("pos")).alias("b16"),
-            _hx_be32(F.col("hx"), F.col("pos")).alias("b32"),
-            _hx_le16(F.col("hx"), F.col("pos")).alias("l16"),
-            _hx_le32(F.col("hx"), F.col("pos")).alias("l32"),
+            F.expr(_sx_byte("pos")).alias("b8"),
+            F.expr(_sx_be16("pos")).alias("b16"),
+            F.expr(_sx_be32("pos")).alias("b32"),
+            F.expr(_sx_le16("pos")).alias("l16"),
+            F.expr(_sx_le32("pos")).alias("l32"),
         ).collect()
     }
     for i, blob, pos in rows:
         want = (
+            py_read(blob, pos, 1, "big"),
             py_read(blob, pos, 2, "big"),
             py_read(blob, pos, 4, "big"),
             py_read(blob, pos, 2, "little"),
             py_read(blob, pos, 4, "little"),
         )
         assert got[i] == want, (i, blob.hex(), pos, got[i], want)
+
+
+def test_hex_writers_match_to_bytes(spark):
+    """Every fixture payload is assembled by the _shex* writers, so a
+    writer that truncates or swaps bytes would corrupt the fixtures
+    both sniffers parse. For random values inside each field's width,
+    including both ends of the range, each writer must equal Python
+    ``v.to_bytes(n, order).hex().upper()``."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from dns_log_transformer_spark.operators.multimodal import (
+        _shex2,
+        _shex_be16,
+        _shex_be32,
+        _shex_le16,
+        _shex_le24,
+        _shex_le32,
+    )
+
+    writers = {
+        "h2": (_shex2, 1, "big"),
+        "b16": (_shex_be16, 2, "big"),
+        "b32": (_shex_be32, 4, "big"),
+        "l16": (_shex_le16, 2, "little"),
+        "l24": (_shex_le24, 3, "little"),
+        "l32": (_shex_le32, 4, "little"),
+    }
+    rng = random.Random(0x5EED)
+    rows = []
+    for name, (_, n, _) in writers.items():
+        top = 256**n - 1
+        for v in [0, 1, top] + [rng.randrange(top + 1) for _ in range(30)]:
+            rows.append((name, v))
+    df = spark.createDataFrame(rows, "w string, v long")
+    got = df.select(
+        "w",
+        "v",
+        *[F.expr(fn("v")).alias(name) for name, (fn, _, _) in writers.items()],
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        _, n, order = writers[r["w"]]
+        want = r["v"].to_bytes(n, order).hex().upper()
+        assert r[r["w"]] == want, (r["w"], r["v"], r[r["w"]], want)

@@ -58,8 +58,7 @@ BNLJ_DOCUMENTED = {
 
 # The single measured row-at-a-time Python exception: the sentence-split
 # UDTF's pickled path beats Arrow 0.28s vs 0.70s at sf0.1 (per-value
-# conversion overhead on small-row 1->N fan-out); pipelines use the
-# pure-codegen sentences_fast twin (see operators/text.py).
+# conversion overhead on small-row 1->N fan-out; see operators/text.py).
 ROW_PYTHON_DOCUMENTED = {"text_sentences"}
 
 

@@ -124,3 +124,39 @@ def test_receiver_lands_pretty_printed_body_as_one_line(spark, tmp_path):
         rec, "@0x000000000000"
     )
     assert quarantine.count() == 0
+
+
+def test_receiver_rejects_bad_envelopes_before_landing(tmp_path):
+    """A body that parses as JSON but fails the envelope schema gets the
+    Firehose-shaped 400 and nothing lands: acked, its records would be
+    dropped by explode_records with no quarantine row. A body at the
+    limits still lands."""
+    landing = str(tmp_path / "landing")
+    rx = FirehoseReceiver(landing, host="127.0.0.1").start()
+    url = f"http://127.0.0.1:{rx.port}/endpoint"
+    good = {"data": "eA=="}
+    bad = [
+        {"records": [good]},  # no requestId
+        {"requestId": 7, "records": [good]},
+        {"requestId": "r", "records": []},
+        {"requestId": "r", "records": [good] * 10_001},
+        {"requestId": "r", "records": [good, {"data": "x" * 1_365_337}]},
+        {"requestId": "r", "records": [good, {"data": None}]},
+        {"requestId": "r", "records": [good, {}]},
+        {"requestId": "r", "records": [good, "eA=="]},
+        [1, 2],
+        None,
+        "x",
+    ]
+    try:
+        for n, body in enumerate(bad):
+            code, reply = _post(url, json.dumps(body).encode())
+            assert code == 400, n
+            assert reply["requestId"] == "unknown" and reply["errorMessage"], n
+        assert os.listdir(landing) == []
+        limits = {"requestId": "ok", "records": [{"data": "x" * 1_365_336}] + [good] * 9_999}
+        code, reply = _post(url, json.dumps(limits).encode())
+        assert code == 200 and reply["requestId"] == "ok"
+    finally:
+        rx.stop()
+    assert len([f for f in os.listdir(landing) if not f.startswith(".")]) == 1

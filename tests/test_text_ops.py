@@ -52,26 +52,6 @@ def test_connected_components_raises_on_non_convergence(spark):
     assert comps == {1}
 
 
-def test_sentences_fast_matches_udtf(spark):
-    """The codegen'd hot-path splitter and the UDTF surface demo must
-    produce identical rows (same ids, numbering, trimming, drops)."""
-    from dns_log_transformer_spark.operators.text import sentences, sentences_fast
-
-    docs = spark.createDataFrame(
-        [
-            (1, "One. Two.  Three."),
-            (2, "...leading. dots..."),
-            (3, ""),
-            (4, None),
-            (5, "no terminal period"),
-        ],
-        "doc_id long, text string",
-    )
-    a = {tuple(r) for r in sentences(docs).collect()}
-    b = {tuple(r) for r in sentences_fast(docs).collect()}
-    assert a == b and (5, 0, "no terminal period") in a
-
-
 def test_quality_classifier_margins_are_exact(spark):
     """Margins must be exact integer sums of per-token weights; same doc
     -> same margin; score = margin / n_tokens."""
