@@ -5,9 +5,10 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash -> CORRECTNESS_r{N}.json).
 
-All queries live in ``dns_log_transformer_spark.queries`` (one module per
-surface: analytics / dns_pipeline / llm_ops / advanced); this file just
-exposes the registry in the driver's shape.
+All queries live in ``dns_log_transformer_spark.queries``, one module
+per domain (tpch, relational, dns_pipeline, text, dedup, similarity,
+corpus, multimodal); this file just exposes the registry in the shape
+above.
 """
 
 from __future__ import annotations

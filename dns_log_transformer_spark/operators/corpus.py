@@ -1234,7 +1234,7 @@ def source_scorecard(
     contamination pct. Composition of three individually-attested
     pipelines assembled with per-doc flags and ONE conditional-agg
     groupBy(source); shared by the registered batch query
-    (queries/round7.py, DuckDB-oracle-attested) and the streaming
+    (queries/corpus.py, DuckDB-oracle-attested) and the streaming
     corpus monitor's pin test (streaming/corpus_monitor.py)."""
     from dns_log_transformer_spark.operators import dedup, text
 
@@ -1244,7 +1244,7 @@ def source_scorecard(
     ).select(id_col, "is_contaminated")
     # NULL-text fingerprints coalesce to '' on BOTH engines: Spark's
     # window groups NULLs together while DuckDB's USING(f) join drops
-    # them (queries/round7.py mirrors this coalesce)
+    # them (queries/corpus.py's oracle mirrors this coalesce)
     wfp = Window.partitionBy("_f")
     exdup = (
         text.with_fingerprint(docs, text_col=text_col)

@@ -321,7 +321,7 @@ def minhash_signatures(
 #: band is oversized are exact/near-exact-dup territory for
 #: content-hash dedup instead. Far above fixture occupancy (max 18 at
 #: sf0.1, 38 in the x10 replicas), so attested oracle hashes are
-#: unchanged; the DuckDB oracles mirror the cap (queries/llm_ops.py).
+#: unchanged; the DuckDB oracles mirror the cap (queries/oracle_sql.py).
 LSH_BUCKET_CAP = 100
 
 
@@ -351,7 +351,7 @@ def drop_heavy_buckets(bucketed: DataFrame, bucket_cap: int) -> DataFrame:
     asserted for both consumers in test_skew_and_plans.
 
     Public API alongside ``heavy_bucket_keys`` / ``lsh_band_rows``
-    (ADVICE r8): external consumers are queries/round8.py's
+    (ADVICE r8): external consumers are queries/dedup.py's
     incremental delta and streaming/neardup_index.py's accumulated
     occupancy cap."""
     heavy = heavy_bucket_keys(bucketed, bucket_cap)

@@ -13,20 +13,14 @@ columns by name before hashing values.
 from dns_log_transformer_spark.queries.registry import ALL_QUERIES, Query, register
 
 # importing the modules populates the registry
-from dns_log_transformer_spark.queries import analytics  # noqa: E402,F401
+from dns_log_transformer_spark.queries import tpch  # noqa: E402,F401
+from dns_log_transformer_spark.queries import relational  # noqa: E402,F401
 from dns_log_transformer_spark.queries import dns_pipeline  # noqa: E402,F401
-from dns_log_transformer_spark.queries import llm_ops  # noqa: E402,F401
-from dns_log_transformer_spark.queries import advanced  # noqa: E402,F401
-from dns_log_transformer_spark.queries import round6  # noqa: E402,F401
-from dns_log_transformer_spark.queries import round7  # noqa: E402,F401
-from dns_log_transformer_spark.queries import round8  # noqa: E402,F401
-from dns_log_transformer_spark.queries import round9  # noqa: E402,F401
-from dns_log_transformer_spark.queries import round10  # noqa: E402,F401
-from dns_log_transformer_spark.queries import round11  # noqa: E402,F401
-from dns_log_transformer_spark.queries import round12  # noqa: E402,F401
-from dns_log_transformer_spark.queries import round13  # noqa: E402,F401
-from dns_log_transformer_spark.queries import round14  # noqa: E402,F401
-from dns_log_transformer_spark.queries import round15  # noqa: E402,F401
+from dns_log_transformer_spark.queries import text  # noqa: E402,F401
+from dns_log_transformer_spark.queries import dedup  # noqa: E402,F401
+from dns_log_transformer_spark.queries import similarity  # noqa: E402,F401
+from dns_log_transformer_spark.queries import corpus  # noqa: E402,F401
+from dns_log_transformer_spark.queries import multimodal  # noqa: E402,F401
 
 # The external correctness harness checks the first 50 registered
 # queries in iteration order. Since round 7 that window is DERIVED, not

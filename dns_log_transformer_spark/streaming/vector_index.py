@@ -28,7 +28,7 @@ Codebook retraining is an offline batch concern by design (the
 FAISS/Milvus split): this sink maintains assignments against the
 codebook it was started with.
 
-Batch twin: queries/round6.py ``sim_ivf_delta_index`` (DuckDB-oracle
+Batch twin: queries/similarity.py ``sim_ivf_delta_index`` (DuckDB-oracle
 attested); test_streaming pins the streaming result hash-equal to the
 one-shot batch merge+assign of the same feed.
 """

@@ -70,7 +70,7 @@ def session_stats(
 ) -> DataFrame:
     """Per-user session windows (gap-based): a session closes after
     ``gap`` of inactivity; the watermark lets Spark finalize and evict
-    closed sessions. Batch-mode equivalent of queries/analytics.py's
+    closed sessions. Batch-mode equivalent of queries/relational.py's
     lag-based sessionization — same semantics, streaming-capable."""
     return (
         events.withWatermark(ts_col, watermark)

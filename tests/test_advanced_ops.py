@@ -578,13 +578,13 @@ def test_sliding_distinct_ignores_null_users(spark, monkeypatch):
     production expression regressed."""
     import datetime
 
-    from dns_log_transformer_spark.queries import round8
+    from dns_log_transformer_spark.queries import relational
 
     base = datetime.datetime(2024, 1, 1, 0, 20)
     rows = [(1, base, 10), (2, base, 11), (3, base, None), (4, base, 10)]
     ev = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long")
-    monkeypatch.setattr(round8, "table", lambda _s, _sf, name: ev)
-    out = round8.q_sliding_distinct(spark, "unused").collect()
+    monkeypatch.setattr(relational, "table", lambda _s, _sf, name: ev)
+    out = relational.q_sliding_distinct(spark, "unused").collect()
     counts = {r["n_users_exact"] for r in out}
     assert counts == {2}, f"NULL user leaked into the distinct count: {counts}"
     events = {r["n_events"] for r in out}

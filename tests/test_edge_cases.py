@@ -142,9 +142,7 @@ def test_simhash_cap_binding_matches_oracle(spark):
     import duckdb
     import pandas as pd
 
-    from dns_log_transformer_spark.queries.llm_ops import (
-        _simhash_pairs_oracle,
-    )
+    from dns_log_transformer_spark.queries.dedup import _simhash_pairs_oracle
 
     rows = [(i, "the same boilerplate text repeated everywhere") for i in range(12)]
     rows += [

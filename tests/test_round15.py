@@ -178,8 +178,8 @@ def test_warcgz_to_shards_funnel_invariants(spark):
     magnitude (>= ceil(tokens/budget) per construction)."""
     import math
 
-    from dns_log_transformer_spark.queries.llm_ops import _PACK_BUDGET
-    from dns_log_transformer_spark.queries.round15 import (
+    from dns_log_transformer_spark.queries.corpus import (
+        _PACK_BUDGET,
         corpus_warcgz_to_shards,
     )
 

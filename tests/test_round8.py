@@ -15,7 +15,7 @@ import os
 
 import duckdb
 
-from dns_log_transformer_spark.queries.round8 import _RECRAWL_OFFSET
+from dns_log_transformer_spark.queries.dedup import _RECRAWL_OFFSET
 
 TESTDATA = "/root/testdata"
 
@@ -44,6 +44,6 @@ def test_recrawl_offset_clears_fixture_ids():
 def test_delta_oracle_retarget_is_single_mention():
     # registration already runs _delta_oracle() at import; re-run the
     # guard explicitly so a failure names the invariant, not an import
-    from dns_log_transformer_spark.queries.llm_ops import _MH_PAIRS_CTES
+    from dns_log_transformer_spark.queries.oracle_sql import _MH_PAIRS_CTES
 
     assert _MH_PAIRS_CTES.count("FROM documents") == 1

@@ -329,7 +329,7 @@ def test_basket_queries_plan_has_cap(spark):
 
     from dns_log_transformer_spark.plans import physical_plan
     from dns_log_transformer_spark.queries import ALL_QUERIES
-    from dns_log_transformer_spark.queries.round6 import BASKET_CAP
+    from dns_log_transformer_spark.queries.relational import BASKET_CAP
     from tests.conftest import SF_SMOKE
 
     for name in ("q_copurchase_pairs", "q_link_prediction_aa"):

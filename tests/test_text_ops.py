@@ -121,16 +121,16 @@ def test_fingerprint_keeps_zero_token_docs(spark, monkeypatch):
     (code-review r10: an inner join silently dropped those docs on
     both engines, so oracle parity could never catch it — and an
     exact-dup pass that loses blank docs never collapses them)."""
-    from dns_log_transformer_spark.queries import llm_ops
+    from dns_log_transformer_spark.queries import text as text_queries
 
     df = spark.createDataFrame(
         [(1, "real words here"), (2, "   "), (3, "")],
         "doc_id long, text string",
     )
-    monkeypatch.setattr(llm_ops, "table", lambda _s, _sf, name: df)
+    monkeypatch.setattr(text_queries, "table", lambda _s, _sf, name: df)
     rows = {
         r["doc_id"]: (r["fingerprint"] is not None, r["simhash"])
-        for r in llm_ops.text_fingerprint(spark, "unused").collect()
+        for r in text_queries.text_fingerprint(spark, "unused").collect()
     }
     assert set(rows) == {1, 2, 3}, f"docs dropped: {sorted(rows)}"
     assert rows[1][0] and rows[1][1] is not None
@@ -140,7 +140,7 @@ def test_fingerprint_keeps_zero_token_docs(spark, monkeypatch):
     # normalize to '' so they MUST collapse to the same exact-dup key
     fps = {
         r["doc_id"]: r["fingerprint"]
-        for r in llm_ops.text_fingerprint(spark, "unused").collect()
+        for r in text_queries.text_fingerprint(spark, "unused").collect()
     }
     assert fps[2] == fps[3], "normalized-empty docs must share a fingerprint"
 

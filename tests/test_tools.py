@@ -1,9 +1,11 @@
-"""The command-line tools under ``tools/``: each imports, none hard-codes
-the checkout it runs from, the scale replica keeps every join inside
-its replica, and a named parity run checks only the named queries."""
+"""The command-line tools under ``tools/``: each imports, neither they
+nor the package hard-code the checkout they run from, the scale replica
+keeps every join inside its replica, and a named parity run checks only
+the named queries."""
 
 from __future__ import annotations
 
+import ast
 import importlib
 import os
 import re
@@ -36,6 +38,19 @@ def test_tools_find_the_repo_from_their_own_path():
         assert str(REPO_ROOT) not in src, path.name
         for literal in re.findall(r"""["'](/\w[^"']*)""", src):
             assert literal.startswith(fixtures), (path.name, literal)
+
+
+def test_package_finds_the_repo_from_its_own_path():
+    """Files the package writes next to itself (staged archives) must
+    land in the checkout it was imported from, never in a fixed one, so
+    the only absolute paths a module may name are the fixtures."""
+    fixtures = os.path.dirname(SF_SMOKE)
+    for path in (REPO_ROOT / "dns_log_transformer_spark").rglob("*.py"):
+        src = path.read_text()
+        assert str(REPO_ROOT) not in src, path.name
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Constant) and re.match(r"/\w+/", str(node.value)):
+                assert node.value.startswith(fixtures), (path.name, node.value)
 
 
 def _views(con, schema: str, sf_dir: str) -> None:

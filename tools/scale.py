@@ -49,7 +49,7 @@ SRC = "/root/testdata/sf0.1"
 
 #: per-replica key offset. It must exceed every 1x key (the largest at
 #: sf0.1 is 149,999), and at x100 the largest key (~9.9e8) must stay
-#: below ``_RECRAWL_OFFSET`` (1e12) in ``queries/round8.py``.
+#: below ``_RECRAWL_OFFSET`` (1e12) in ``queries/dedup.py``.
 KEY_STRIDE = 10_000_000
 
 #: replicated tables -> their key columns and the columns referencing them
