@@ -36,6 +36,10 @@ MAX_RECORDS_PER_REQUEST = 10_000
 MIN_RECORDS_PER_REQUEST = 1
 MAX_RECORD_DATA_CHARS = 1_365_336
 
+#: Largest request body the receiver reads: 64 MiB, Firehose's largest
+#: HTTP-endpoint buffer. A larger Content-Length gets a 413 unread.
+MAX_REQUEST_BODY_BYTES = 64 * 1024 * 1024
+
 # ---------------------------------------------------------------------------
 # Route53 Resolver query-log record (reference app/app.py:177-192,203-215)
 # ---------------------------------------------------------------------------

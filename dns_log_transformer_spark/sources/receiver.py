@@ -16,6 +16,10 @@ Reproduced reference behavior:
   `transforms.envelope.envelope_validity_predicate`: a string
   `requestId` and 1-10,000 `records`, each an object with a `data`
   string of at most 1,365,336 chars. A rejected body never lands;
+- 413 with errorMessage, unread, on a Content-Length above 64 MiB
+  (``schemas.MAX_REQUEST_BODY_BYTES``, Firehose's largest HTTP-endpoint
+  buffer), so one request cannot make the receiver buffer an unbounded
+  body;
 - `GET /health` -> 200 (app/app.py:265-267).
 
 Deliberate upgrade (documented for parity review): the reference acks
@@ -41,6 +45,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from dns_log_transformer_spark.schemas import (
     MAX_RECORD_DATA_CHARS,
     MAX_RECORDS_PER_REQUEST,
+    MAX_REQUEST_BODY_BYTES,
     MIN_RECORDS_PER_REQUEST,
 )
 
@@ -93,10 +98,10 @@ class _Handler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(payload)
 
-    def _reject(self, message: str) -> None:
-        """Firehose-shaped 400 (app/app.py:69-74)."""
+    def _reject(self, message: str, code: int = 400) -> None:
+        """Firehose-shaped error reply (app/app.py:69-74)."""
         self._send(
-            400, {"requestId": "unknown", "timestamp": _now_ms(), "errorMessage": message}
+            code, {"requestId": "unknown", "timestamp": _now_ms(), "errorMessage": message}
         )
 
     def do_GET(self):
@@ -121,7 +126,13 @@ class _Handler(BaseHTTPRequestHandler):
         if not length_header.isdecimal():
             self._reject("Content-Length must be a non-negative integer")
             return
-        raw = self.rfile.read(int(length_header))
+        length = int(length_header)
+        if length > MAX_REQUEST_BODY_BYTES:
+            self._reject(
+                f"request body over {MAX_REQUEST_BODY_BYTES} bytes", code=413
+            )
+            return
+        raw = self.rfile.read(length)
         try:
             body = json.loads(raw)
         except (json.JSONDecodeError, UnicodeDecodeError):

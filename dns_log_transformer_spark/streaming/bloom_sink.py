@@ -8,19 +8,19 @@ Why it streams for free: bit-OR is associative, commutative AND
 idempotent, so the accumulated bitset equals the one-shot batch bitset
 of the full benchmark feed under ANY batch split — including replayed
 or duplicated benchmark docs across batches (idempotence is what the
-CMS grid does NOT have; a replayed doc would double-count there, while
-the Bloom table is replay-proof by construction — the right property
-for an at-least-once ``foreachBatch`` contract).
+CMS grid does NOT have), so a doc streamed twice in different batches
+sets no new bits.
 
 The table is the bitset's word rows (<= ceil(m_bits/63) rows, ~1k at
 the 8 KB default): bounded by the m_bits PARAMETER, never by how many
-benchmark docs have streamed through, so the read -> OR-merge ->
-overwrite cycle is O(sketch) per batch — no touched-partition pruning
-needed (contrast cdc/vector/near-dup sinks, which maintain O(corpus)
-tables). Decontamination consumers read the accumulated words with
-``bloom_words_list`` (driver state = the same bounded word list) and
-probe via ``operators/corpus.py decontaminate_against`` — k codegen
-bit tests riding the corpus scan, zero joins.
+benchmark docs have streamed through. Each micro-batch folds into it
+with ``sinks.fold_epoch`` (the same fenced fold as the sketch and
+view sinks), which is O(sketch) per batch — no touched-partition
+pruning needed (contrast cdc/vector/near-dup sinks, which maintain
+O(corpus) tables). Decontamination consumers read the accumulated
+words with ``bloom_words_list`` (driver state = the same bounded word
+list) and probe via ``operators/corpus.py decontaminate_against`` —
+k codegen bit tests riding the corpus scan, zero joins.
 
 The reference has no state at all (stateless per-request transform,
 app/app.py:219-263); this module exists for the engine's streaming
@@ -42,15 +42,17 @@ from dns_log_transformer_spark.operators.sketches import (
     _WORD_BITS,
     bloom_word_rows,
 )
-from dns_log_transformer_spark.streaming.cdc_sink import _require_local_path
+from dns_log_transformer_spark.streaming.sinks import (
+    fold_epoch,
+    read_base,
+    require_local_path,
+)
 
 
 def read_bloom_words(spark: SparkSession, table_path: str) -> DataFrame | None:
     """The accumulated bitset as (word, bits) rows. None before any
     batch has committed."""
-    _require_local_path(table_path)
-    p = os.path.join(table_path, "bloom")
-    return spark.read.parquet(p) if os.path.isdir(p) else None
+    return read_base(spark, os.path.join(table_path, "bloom"))[1]
 
 
 def bloom_words_list(
@@ -82,29 +84,26 @@ def bloom_filter_sink(
     benchmark documents: each micro-batch's distinct n-gram shingles
     set their k bits, OR-merged into the stored word rows. Returns the
     StreamingQuery."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
     bloom_path = os.path.join(table_path, "bloom")
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
+    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         from dns_log_transformer_spark.operators.dedup import with_shingles
 
-        spark = batch_df.sparkSession
         shingle_set = (
             with_shingles(batch_df, id_col, text_col, n)
             .select(F.explode("shingles").alias("shingle"))
             .distinct()
         )
-        grid = bloom_word_rows(shingle_set, "shingle", k, m_bits)
-        if os.path.isdir(bloom_path):
-            grid = grid.unionByName(spark.read.parquet(bloom_path))
-        grid = (
-            grid.groupBy("word")
-            .agg(F.bit_or("bits").alias("bits"))
-            .localCheckpoint()  # break the read-own-write cycle
+        fold_epoch(
+            bloom_word_rows(shingle_set, "shingle", k, m_bits),
+            epoch_id,
+            bloom_path,
+            ["word"],
+            [F.bit_or("bits").alias("bits")],
         )
-        grid.write.mode("overwrite").parquet(bloom_path)
 
     return (
         bench.writeStream.foreachBatch(merge_batch)

@@ -30,57 +30,25 @@ across partitions (a crash mid-write can leave some buckets new, some
 old until the replay completes). The production answer is a
 transactional table format (Delta/Iceberg/Hudi); this module is the
 engine-level mechanics those formats wrap, kept format-free on purpose.
-The merged batch result is ``localCheckpoint``ed before the write so
-the plan never reads the same files it is overwriting.
+The merge itself is ``sinks.merge_touched_buckets``, shared with the
+vector-index sink.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from dns_log_transformer_spark.operators import cdc
-from dns_log_transformer_spark.operators.corpus import hash_bucket
+from dns_log_transformer_spark.streaming.sinks import (
+    has_partitions,
+    merge_touched_buckets,
+    overwrite_partitions,
+    require_local_path,
+    with_bucket,
+)
 
 N_BUCKETS_DEFAULT = 16
-
-
-def _require_local_path(table_path: str) -> None:
-    """Table discovery uses os.path/os.listdir, which only sees the
-    driver-local filesystem: an hdfs:// or s3:// path would silently
-    look like "no table yet" and the first batch would OVERWRITE
-    instead of merging. Enforce the documented local-path contract
-    (a production deployment swaps this module for a transactional
-    table format anyway — see the module docstring). A 'file://' URI
-    is rejected too: Spark would accept it but every os.path discovery
-    check on the URI STRING returns False — the exact silent-overwrite
-    failure this guard exists to prevent. Pass the bare path instead."""
-    if "://" in table_path:
-        scheme = table_path.split("://", 1)[0]
-        raise ValueError(
-            "sink tables are driver-local-filesystem only and must be "
-            f"passed as bare paths (got scheme {scheme!r}; even "
-            "'file://' breaks the os.path-based table discovery); use "
-            "Delta/Iceberg/Hudi for remote object-store tables"
-        )
-
-
-def _has_partitions(path: str, prefix: str) -> bool:
-    """Does this local parquet table directory have <prefix>= partition
-    subdirectories? The shared discovery probe for every sink that
-    maintains a partitioned table (cdc/vector/near-dup/mv)."""
-    return os.path.isdir(path) and any(
-        e.startswith(prefix) for e in os.listdir(path)
-    )
-
-
-def _with_bucket(df: DataFrame, key_col: str, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        "_kb", (hash_bucket(F.col(key_col), seed=0) % n_buckets).cast("int")
-    )
 
 
 def read_latest(
@@ -91,8 +59,8 @@ def read_latest(
 ) -> DataFrame | None:
     """The live view: stored rows minus tombstones (and the internal
     bucket column). None if nothing has been written yet."""
-    _require_local_path(table_path)
-    if not _has_partitions(table_path, "_kb="):
+    require_local_path(table_path)
+    if not has_partitions(table_path, "_kb="):
         return None
     return (
         spark.read.parquet(table_path)
@@ -114,47 +82,16 @@ def upsert_sink(
     """Start the streaming MERGE: ``changes`` is a streaming DataFrame
     of change rows; each micro-batch folds into the bucket-partitioned
     latest table at ``table_path``. Returns the StreamingQuery."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        batch = _with_bucket(batch_df, key_col, n_buckets)
-        touched = [r["_kb"] for r in batch.select("_kb").distinct().collect()]
-        base = None
-        if _has_partitions(table_path, "_kb="):
-            # partition pruning: only the touched buckets are read back
-            base = spark.read.parquet(table_path).filter(
-                F.col("_kb").isin(touched)
-            )
-        allc = batch if base is None else base.unionByName(batch)
-        merged = cdc.upsert_latest(
-            allc,
-            [key_col, "_kb"],
-            version_col,
-            op_col,
-            delete_op,
-            keep_tombstones=True,
-            # total order under (key, version) collisions: the op string
-            # breaks the tie deterministically ('U' beats 'D'), so an
-            # epoch replay containing a same-version upsert+delete pair
-            # converges to the same table either way
-            tiebreak_cols=[op_col],
+        batch = with_bucket(batch_df, key_col, n_buckets)
+        merged, _stored = merge_touched_buckets(
+            batch, table_path, key_col, version_col, op_col, delete_op
         )
-        # materialize BEFORE writing: the plan reads the same parquet
-        # partitions the dynamic overwrite replaces
-        merged = merged.localCheckpoint()
-        # dynamic overwrite scoped to THIS write (writer option, not a
-        # session conf.set — a session-wide flip would silently turn
-        # every later partitioned mode('overwrite') on the shared
-        # session into a partition-matching overwrite)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_kb")
-            .parquet(table_path)
-        )
+        overwrite_partitions(merged, table_path, "_kb")
 
     return (
         changes.writeStream.foreachBatch(merge_batch)

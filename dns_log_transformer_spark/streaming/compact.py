@@ -34,7 +34,7 @@ import shutil
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from dns_log_transformer_spark.streaming.cdc_sink import _require_local_path
+from dns_log_transformer_spark.streaming.sinks import require_local_path
 
 
 def _partition_col(table_path: str) -> str | None:
@@ -57,7 +57,7 @@ def compact_partitioned_table(spark: SparkSession, table_path: str) -> int:
     Returns the number of partitions compacted (0 = nothing to do).
     Quiesce the sink first — see the module docstring for the crash
     window and recovery."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
     col = _partition_col(table_path)
     if col is None:
         return 0
@@ -195,7 +195,7 @@ def compact_store(spark: SparkSession, table_path: str) -> dict[str, int]:
     sink's shingle/band/pair tables), plus the root itself when it is
     directly partitioned (cdc/vector stores). Returns
     {relative path: partitions compacted}."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
     out: dict[str, int] = {}
     if _partition_col(table_path) is not None:
         out["."] = compact_partitioned_table(spark, table_path)

@@ -50,15 +50,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from dns_log_transformer_spark.operators.corpus import hash_bucket
-from dns_log_transformer_spark.streaming.cdc_sink import (
-    N_BUCKETS_DEFAULT,
-    _has_partitions,
-    _require_local_path,
-)
+from dns_log_transformer_spark.streaming.cdc_sink import N_BUCKETS_DEFAULT
 from dns_log_transformer_spark.streaming.neardup_index import (
     neardup_merge_batch,
     read_pairs_reconciled,
+)
+from dns_log_transformer_spark.streaming.sinks import (
+    drop_seen_ids,
+    has_partitions,
+    require_local_path,
+    with_bucket,
 )
 
 
@@ -84,9 +85,9 @@ def read_scorecard(
     )
     from dns_log_transformer_spark.operators.dedup import LSH_BUCKET_CAP
 
-    _require_local_path(table_path)
+    require_local_path(table_path)
     flags_path = os.path.join(table_path, "flags")
-    if not _has_partitions(flags_path, "_kb="):
+    if not has_partitions(flags_path, "_kb="):
         return None
     flags = spark.read.parquet(flags_path).drop("_kb")
     wfp = Window.partitionBy("fingerprint")
@@ -157,7 +158,7 @@ def corpus_monitor_sink(
         bloom_bits_collect,
     )
 
-    _require_local_path(table_path)
+    require_local_path(table_path)
     flags_path = os.path.join(table_path, "flags")
     neardup_path = os.path.join(table_path, "neardup")
     k = BLOOM_K if k is None else k
@@ -180,22 +181,11 @@ def corpus_monitor_sink(
         spark = batch_df.sparkSession
         from dns_log_transformer_spark.operators.text import with_fingerprint
 
-        batch_docs = batch_df.dropDuplicates([id_col]).localCheckpoint()
+        batch_docs = with_bucket(
+            batch_df.dropDuplicates([id_col]).localCheckpoint(), id_col, n_buckets
+        )
         # replay-drop against the flags store's touched buckets
-        kb = (hash_bucket(F.col(id_col), seed=0) % n_buckets).cast("int")
-        batch_docs = batch_docs.withColumn("_kb", kb)
-        if _has_partitions(flags_path, "_kb="):
-            seen_kb = [
-                r["_kb"] for r in batch_docs.select("_kb").distinct().collect()
-            ]
-            seen = (
-                spark.read.parquet(flags_path)
-                .filter(F.col("_kb").isin(seen_kb))
-                .select(id_col)
-            )
-            batch_docs = batch_docs.join(
-                F.broadcast(seen), id_col, "left_anti"
-            ).localCheckpoint()
+        batch_docs = drop_seen_ids(batch_docs, flags_path, id_col)
         if batch_docs.isEmpty():
             return
 

@@ -5,16 +5,13 @@ stream of fact rows — with EXACTLY-ONCE aggregate semantics under
 epoch replays.
 
 Why fencing matters: ``foreachBatch`` is at-least-once — after a crash
-the last epoch REPLAYS. An additive merge (read table, add batch,
-rewrite — the CMS sink's shape) double-counts the replayed rows; the
-Bloom sink survives only because bit-OR is idempotent. Counting
-aggregates are NOT idempotent, so this sink makes the WRITE idempotent
-instead of the merge: each epoch's partial aggregate lands in its own
-``_epoch=N`` partition via dynamic partition overwrite — a replay of
-epoch N overwrites ``_epoch=N`` with identical content, never touching
-any other epoch. The read side merges partials across epochs (SUM of
-SUMs, SUM of COUNTs — the map-side-combine algebra at the storage
-layer).
+the last epoch REPLAYS, and counting aggregates are NOT idempotent. So
+this sink makes the WRITE idempotent instead of the merge: each
+epoch's partial aggregate lands in its own ``_epoch=N`` partition via
+dynamic partition overwrite — a replay of epoch N overwrites
+``_epoch=N`` with identical content, never touching any other epoch.
+The read side merges partials across epochs (SUM of SUMs, SUM of
+COUNTs — the map-side-combine algebra at the storage layer).
 
 Scale design:
 - per-batch write cost is O(batch's distinct keys) — only the new
@@ -22,27 +19,22 @@ Scale design:
   maintenance (contrast cdc_sink, which must read touched buckets);
 - the read-side merge grows with the number of epochs, so
   ``compact_mv`` periodically folds the epoch partials into a base —
-  after which reads cost O(keys). Compaction commits ATOMICALLY via
-  the ``_FENCE`` json (written with an ``os.replace`` rename): the
-  fence names both the highest folded epoch and the base DIRECTORY
-  holding the fold (an underscore-prefixed dir Spark's parquet reader
-  ignores, so it is invisible until the fence points at it). The fold
-  sequence is: pin the exact epoch list to fold -> aggregate exactly
-  those partitions (+ the previous base) -> ``localCheckpoint`` ->
-  write the new base dir -> replace the fence -> best-effort GC of the
-  now-unreferenced partials and old base. ``read_mv`` reads the base
-  the fence names plus only partials ABOVE the fence, and
-  ``merge_epoch`` drops any epoch at or below the fence as a no-op —
-  so a crash at ANY point leaves a consistent view (before the fence
-  replace: the old view plus invisible garbage; after: the new view,
-  with leftover folded partials invisible until GC'd), and running
-  compaction WHILE the sink is live is safe: a new epoch landing
-  mid-compaction is above the pinned fence, is never folded, never
-  deleted, and stays visible as a partial. Residual caveat (the one a
-  transactional table format closes): a replay rewriting a partial's
-  files concurrently with a reader scanning that same partition can
-  tear, because parquet directory swaps are not atomic — same caveat
-  as cdc_sink.
+  after which reads cost O(keys). The fold is ``sinks.fold_epoch``,
+  the same fenced fold the sketch and Bloom sinks use: the ``_FENCE``
+  json names the highest folded epoch and the ``_base_e<N>`` dir
+  holding the fold, and one ``os.replace`` of it is the commit.
+  ``read_mv`` reads the base the fence names plus only partials ABOVE
+  the fence, and ``merge_epoch`` drops any epoch at or below the fence
+  as a no-op — so a crash at ANY point leaves a consistent view
+  (before the fence replace: the old view plus invisible garbage;
+  after: the new view, with leftover folded partials invisible until
+  swept), and running compaction WHILE the sink is live is safe: a new
+  epoch landing mid-compaction is above the pinned fence, is never
+  folded, never deleted, and stays visible as a partial. Residual
+  caveat (the one a transactional table format closes): a replay
+  rewriting a partial's files concurrently with a reader scanning that
+  same partition can tear, because parquet directory swaps are not
+  atomic — same caveat as cdc_sink.
 
 Aggregates kept: per-key row count and exact integer sum (cents
 discipline) — extend by adding more algebraic aggregates (min/max/
@@ -52,39 +44,28 @@ sumsq) to the same partial-merge pattern.
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from dns_log_transformer_spark.streaming.cdc_sink import (
-    _has_partitions,
-    _require_local_path,
+from dns_log_transformer_spark.streaming.sinks import (
+    fold_epoch,
+    has_partitions,
+    overwrite_partitions,
+    read_base,
+    read_fence,
+    require_local_path,
 )
 
 
-def _fence_path(table_path: str) -> str:
-    return os.path.join(table_path, "_FENCE")
-
-
-def _read_fence_info(table_path: str) -> tuple[int, str | None]:
-    """(highest epoch ever folded, base dir name holding the fold).
-    (-1, None) before any fold. Older fences (pre the atomic-commit
-    rework) carried no base name — their fold lives in the
-    ``_epoch=-1`` partition, which read_mv still honors."""
-    p = _fence_path(table_path)
-    if not os.path.exists(p):
-        return -1, None
-    import json
-
-    with open(p) as f:
-        info = json.load(f)
-    return int(info["folded_thru"]), info.get("base")
-
-
-def _read_fence(table_path: str) -> int:
-    """Highest epoch ever folded by compaction (-1 before any fold)."""
-    return _read_fence_info(table_path)[0]
+def _merge_aggs() -> list[Column]:
+    """SUM of COUNTs and SUM of SUMs: how partials and the base merge."""
+    return [
+        F.sum("n_rows").cast("long").alias("n_rows"),
+        F.sum("sum_val").cast("long").alias("sum_val"),
+    ]
 
 
 def merge_epoch(
@@ -100,8 +81,8 @@ def merge_epoch(
     rewrites identical content — and epochs at or below the compaction
     fence are dropped (their rows already live in the folded base).
     Public so tests (and backfills) can drive epochs directly."""
-    _require_local_path(table_path)
-    if int(epoch_id) <= _read_fence(table_path):
+    require_local_path(table_path)
+    if int(epoch_id) <= read_fence(table_path)[0]:
         return  # already folded into the base; a replay must no-op
     if batch_df.isEmpty():
         return
@@ -115,144 +96,75 @@ def merge_epoch(
         )
         .withColumn("_epoch", F.lit(int(epoch_id)))
     )
-    (
-        partial.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")  # writer-scoped
-        .partitionBy("_epoch")
-        .parquet(table_path)
+    overwrite_partitions(partial, table_path, "_epoch")
+
+
+def _epochs(table_path: str) -> list[int]:
+    """The epoch partials on disk, folded or not."""
+    if not os.path.isdir(table_path):
+        return []
+    return [
+        int(e.split("=", 1)[1])
+        for e in os.listdir(table_path)
+        if e.startswith("_epoch=")
+    ]
+
+
+def _partials(
+    spark: SparkSession, table_path: str, keep: Column
+) -> DataFrame | None:
+    """The epoch partials ``keep`` selects, as (key, n_rows, sum_val)."""
+    if not has_partitions(table_path, "_epoch="):
+        return None
+    return (
+        spark.read.parquet(table_path)
+        .filter(keep)
+        .select("key", "n_rows", "sum_val")
     )
-
-
-def _view_parts(
-    spark: SparkSession, table_path: str, fence: int, base: str | None
-) -> list[DataFrame]:
-    """The frames that make up the committed view: the base dir the
-    fence names (if any) plus partials the fence has NOT folded — every
-    epoch above the fence, plus the legacy ``_epoch=-1`` base partition
-    ONLY while no fence-named base exists (the pre-rework format; once
-    a base dir is committed, any surviving ``_epoch=-1`` is a
-    crashed-compaction leftover already folded into it). Partials at or
-    below the fence are already represented in the base; leaving them
-    out is what makes crashed-compaction leftovers harmless garbage
-    instead of double counts."""
-    parts: list[DataFrame] = []
-    has_base = base is not None and os.path.isdir(os.path.join(table_path, base))
-    if has_base:
-        parts.append(spark.read.parquet(os.path.join(table_path, base)))
-    if _has_partitions(table_path, "_epoch="):
-        keep = F.col("_epoch") > fence
-        if not has_base:
-            keep = keep | (F.col("_epoch") == -1)
-        parts.append(
-            spark.read.parquet(table_path)
-            .filter(keep)
-            .select("key", "n_rows", "sum_val")
-        )
-    return parts
 
 
 def read_mv(spark: SparkSession, table_path: str) -> DataFrame | None:
     """The merged view: (key, n_rows, sum_val) across the fenced base
     plus unfolded epoch partials (SUM of SUMs — the storage-layer
-    map-side combine). None before any epoch has committed."""
-    _require_local_path(table_path)
-    fence, base = _read_fence_info(table_path)
-    parts = _view_parts(spark, table_path, fence, base)
+    map-side combine). Partials at or below the fence already live in
+    the base, so a crashed compaction's leftovers are never counted.
+    None before any epoch has committed."""
+    fence, base = read_base(spark, table_path)
+    parts = [
+        p
+        for p in (base, _partials(spark, table_path, F.col("_epoch") > fence))
+        if p is not None
+    ]
     if not parts:
         return None
     df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    return df.groupBy("key").agg(
-        F.sum("n_rows").cast("long").alias("n_rows"),
-        F.sum("sum_val").cast("long").alias("sum_val"),
-    )
+    return df.groupBy("key").agg(*_merge_aggs())
 
 
 def compact_mv(spark: SparkSession, table_path: str) -> None:
-    """Fold the committed epoch partials into a single base so read
-    cost stops growing with epoch count. Safe to run while the sink is
-    live, and crash-consistent at every step (module docstring):
-
-    1. pin the EXACT epoch list to fold from one directory listing —
-       an epoch the sink lands after this point is above the new fence
-       and is neither folded nor touched;
-    2. aggregate exactly those partitions plus the previous base, and
-       materialize with ``localCheckpoint`` BEFORE anything is written
-       or deleted;
-    3. write the fold to a fresh underscore-prefixed base dir —
-       invisible to every reader until...
-    4. ...the fence json atomically ``os.replace``s to name the new
-       (folded_thru, base) pair: the single commit point;
-    5. best-effort GC of the now-unreferenced partials and old base
-       (read_mv never looks at them again, so a GC crash leaves only
-       dead bytes)."""
-    import json
-    import shutil
-
-    _require_local_path(table_path)
-    fence, base = _read_fence_info(table_path)
-    has_base = base is not None and os.path.isdir(os.path.join(table_path, base))
-    epochs = [
-        int(e.split("=", 1)[1])
-        for e in os.listdir(table_path)
-        if e.startswith("_epoch=")
-    ]
-    # the legacy _epoch=-1 base partition is foldable input only while
-    # no fence-named base exists; afterwards a surviving -1 is a
-    # crashed-GC leftover whose rows already live in the base (folding
-    # it again would double-count — _view_parts ignores it, the sweep
-    # below removes it)
-    to_fold = [e for e in epochs if (e == -1 and not has_base) or e > fence]
-    if not to_fold:
-        _sweep_dead_entries(table_path, fence, base)
-        return
-    new_thru = max([e for e in to_fold if e != -1], default=fence)
-    sources = _view_parts(spark, table_path, fence, base)
-    # restrict the partial side to the PINNED list: an epoch landing
-    # between the listing and this read must stay a live partial, not
-    # get folded under a fence that doesn't cover it
-    sources[-1] = (
-        spark.read.parquet(table_path)
-        .filter(F.col("_epoch").isin(to_fold))
-        .select("key", "n_rows", "sum_val")
-    )
-    df = sources[0] if len(sources) == 1 else sources[0].unionByName(sources[1])
-    folded = (
-        df.groupBy("key")
-        .agg(
-            F.sum("n_rows").cast("long").alias("n_rows"),
-            F.sum("sum_val").cast("long").alias("sum_val"),
+    """Fold the epoch partials above the fence into the base so read
+    cost stops growing with epoch count, then sweep the partials the
+    fence covers. The epoch list is pinned from one directory listing:
+    an epoch the sink lands after it is above the new fence and is
+    neither folded nor touched, so compaction is safe while the sink is
+    live. The fold (``sinks.fold_epoch``) is crash-consistent at every
+    step, and a crashed sweep leaves only dead bytes read_mv ignores."""
+    require_local_path(table_path)
+    fence = read_fence(table_path)[0]
+    to_fold = [e for e in _epochs(table_path) if e > fence]
+    if to_fold:
+        fold_epoch(
+            _partials(spark, table_path, F.col("_epoch").isin(to_fold)),
+            max(to_fold),
+            table_path,
+            ["key"],
+            _merge_aggs(),
         )
-        .localCheckpoint()
-    )
-    new_base = f"_base_e{new_thru}"
-    folded.write.mode("overwrite").parquet(os.path.join(table_path, new_base))
-    tmp = _fence_path(table_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"folded_thru": new_thru, "base": new_base}, f)
-    os.replace(tmp, _fence_path(table_path))  # the atomic commit point
-    for e in to_fold:
-        shutil.rmtree(os.path.join(table_path, f"_epoch={e}"), ignore_errors=True)
-    if base is not None and base != new_base:
-        shutil.rmtree(os.path.join(table_path, base), ignore_errors=True)
-    _sweep_dead_entries(table_path, new_thru, new_base)
-
-
-def _sweep_dead_entries(table_path: str, fence: int, base: str | None) -> None:
-    """Best-effort GC of crash leftovers invisible to read_mv: partials
-    at/below the fence (already represented in the base), the legacy
-    ``_epoch=-1`` partition once a fence-named base exists, and base
-    dirs no fence names — all pure dead bytes."""
-    import shutil
-
-    has_base = base is not None and os.path.isdir(os.path.join(table_path, base))
-    for entry in os.listdir(table_path):
-        full = os.path.join(table_path, entry)
-        if entry.startswith("_epoch="):
-            e = int(entry.split("=", 1)[1])
-            if (e != -1 and e <= fence) or (e == -1 and has_base):
-                shutil.rmtree(full, ignore_errors=True)
-        elif entry.startswith("_base_") and entry != base:
-            shutil.rmtree(full, ignore_errors=True)
+        fence = max(to_fold)
+    for e in _epochs(table_path):
+        if e <= fence:
+            partial = os.path.join(table_path, f"_epoch={e}")
+            shutil.rmtree(partial, ignore_errors=True)
 
 
 def mv_sink(
@@ -275,22 +187,13 @@ def mv_sink(
     safe while the sink is live) right after its own epoch lands, the
     same end-of-callback home as the index sinks' ``compact_max_files``
     trigger."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
         merge_epoch(batch_df, epoch_id, table_path, key_col, value_col)
-        if compact_max_epochs is not None and os.path.isdir(table_path):
-            # isdir guard: an empty first/replayed micro-batch makes
-            # merge_epoch return before the table directory exists —
-            # an unconditional listdir would raise FileNotFoundError
-            # and kill the streaming query (ADVICE r14).
-            fence, _base = _read_fence_info(table_path)
-            unfolded = sum(
-                1
-                for e in os.listdir(table_path)
-                if e.startswith("_epoch=")
-                and int(e.split("=", 1)[1]) > fence
-            )
+        if compact_max_epochs is not None:
+            fence = read_fence(table_path)[0]
+            unfolded = sum(1 for e in _epochs(table_path) if e > fence)
             if unfolded > compact_max_epochs:
                 compact_mv(batch_df.sparkSession, table_path)
 

@@ -67,17 +67,20 @@ from pyspark.sql.streaming import StreamingQuery
 
 from dns_log_transformer_spark.operators import dedup
 from dns_log_transformer_spark.operators.corpus import hash_bucket
-from dns_log_transformer_spark.streaming.cdc_sink import (
-    _has_partitions,
-    N_BUCKETS_DEFAULT,
-    _require_local_path,
+from dns_log_transformer_spark.streaming.cdc_sink import N_BUCKETS_DEFAULT
+from dns_log_transformer_spark.streaming.sinks import (
+    drop_seen_ids,
+    has_partitions,
+    require_local_path,
+    touched_buckets,
+    with_bucket,
 )
 
 
 def read_pairs(spark: SparkSession, table_path: str) -> DataFrame | None:
     """All near-dup pairs emitted so far: (doc_a, doc_b, jaccard).
     None if nothing has been written yet."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
     pairs = os.path.join(table_path, "pairs")
     if not os.path.isdir(pairs):
         return None
@@ -110,7 +113,7 @@ def read_pairs_reconciled(
     if pairs is None:
         return None
     buckets_path = os.path.join(table_path, "buckets")
-    if not _has_partitions(buckets_path, "_bb="):
+    if not has_partitions(buckets_path, "_bb="):
         return pairs
     # dropDuplicates before counting: buckets/ is append-only and a
     # crash between the buckets and shingles writes replays the batch,
@@ -167,7 +170,7 @@ def neardup_index_sink(
     of the foreachBatch callback, where the writer is quiesced by
     construction because foreachBatch serializes batches). None (the
     default) keeps compaction a purely external ops concern."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
         neardup_merge_batch(
@@ -208,7 +211,7 @@ def neardup_merge_batch(
     corpus monitor (streaming/corpus_monitor.py) and backfills can
     drive batches directly — the mv_sink.merge_epoch convention.
     ``compact_max_files``: see :func:`neardup_index_sink`."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
     buckets_path = os.path.join(table_path, "buckets")
     shingles_path = os.path.join(table_path, "shingles")
     pairs_path = os.path.join(table_path, "pairs")
@@ -218,26 +221,16 @@ def neardup_merge_batch(
 
     # 1. shingle the batch (docs with no shingles can never pair);
     #    within-batch id replays collapse to one row
-    sh_b = (
+    sh_b = with_bucket(
         dedup.with_shingles(batch_df, id_col, text_col, n)
         .filter(F.col("n_shingles") > 0)
-        .dropDuplicates([id_col])
-        .withColumn(
-            "_kb", (hash_bucket(F.col(id_col), seed=0) % n_buckets).cast("int")
-        )
-        .localCheckpoint()
-    )
+        .dropDuplicates([id_col]),
+        id_col,
+        n_buckets,
+    ).localCheckpoint()
 
-    # 2. drop ids already indexed (cross-batch replay): anti-join
-    #    against ONLY the shingle-store buckets the batch ids hash to
-    if _has_partitions(shingles_path, "_kb="):
-        seen_kb = [r["_kb"] for r in sh_b.select("_kb").distinct().collect()]
-        seen = (
-            spark.read.parquet(shingles_path)
-            .filter(F.col("_kb").isin(seen_kb))
-            .select(id_col)
-        )
-        sh_b = sh_b.join(F.broadcast(seen), id_col, "left_anti").localCheckpoint()
+    # 2. drop ids already indexed (cross-batch replay)
+    sh_b = drop_seen_ids(sh_b, shingles_path, id_col)
     if sh_b.isEmpty():
         return
 
@@ -257,12 +250,9 @@ def neardup_merge_batch(
     # 4. candidates: batch band keys vs (touched index partitions +
     #    the batch itself); each unordered pair once, batch-side driven
     all_bk = bk_b
-    if _has_partitions(buckets_path, "_bb="):
-        touched_bb = [
-            r["_bb"] for r in bk_b.select("_bb").distinct().collect()
-        ]
+    if has_partitions(buckets_path, "_bb="):
         old_bk = spark.read.parquet(buckets_path).filter(
-            F.col("_bb").isin(touched_bb)
+            F.col("_bb").isin(touched_buckets(bk_b, "_bb"))
         )
         # dropDuplicates on the UNION, not just the store read: a crash
         # between the buckets and shingles appends replays the batch
@@ -311,22 +301,18 @@ def neardup_merge_batch(
 
     # 5. verify exact Jaccard on candidates only; partner shingles
     #    come from the batch plus ONLY the partners' _kb buckets
-    partners = (
+    partners = with_bucket(
         cand.select(F.col("doc_a").alias(id_col))
         .unionByName(cand.select(F.col("doc_b").alias(id_col)))
-        .distinct()
-        .withColumn(
-            "_kb", (hash_bucket(F.col(id_col), seed=0) % n_buckets).cast("int")
-        )
+        .distinct(),
+        id_col,
+        n_buckets,
     )
     all_sh = sh_b.select(id_col, "shingles")
-    if _has_partitions(shingles_path, "_kb="):
-        partner_kb = [
-            r["_kb"] for r in partners.select("_kb").distinct().collect()
-        ]
+    if has_partitions(shingles_path, "_kb="):
         old_sh = (
             spark.read.parquet(shingles_path)
-            .filter(F.col("_kb").isin(partner_kb))
+            .filter(F.col("_kb").isin(touched_buckets(partners)))
             .join(F.broadcast(partners.select(id_col)), id_col, "left_semi")
             .select(id_col, "shingles")
         )

@@ -30,8 +30,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from dns_log_transformer_spark.streaming.cdc_sink import _require_local_path
-from dns_log_transformer_spark.streaming.sinks import send_syslog, write_batch_files
+from dns_log_transformer_spark.streaming.sinks import (
+    require_local_path,
+    send_syslog,
+    write_batch_files,
+)
 from dns_log_transformer_spark.streaming.source import read_firehose_stream
 from dns_log_transformer_spark.transforms import (
     decode_records,
@@ -76,7 +79,7 @@ def batch_writer(
     archive_dir = os.path.join(work_dir, "archive")
     quarantine_dir = os.path.join(work_dir, "quarantine")
     if archive:
-        _require_local_path(work_dir)
+        require_local_path(work_dir)
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         # the archive write and the syslog send each evaluate ``lines``;

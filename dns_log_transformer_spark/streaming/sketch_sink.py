@@ -4,8 +4,8 @@ shape (linear sketches merge associatively, so per-batch update cost
 and table size are O(sketch), independent of how much data has ever
 flowed through).
 
-Two summaries under ``table_path``, both rewritten whole per batch
-because the WHOLE TABLE is bounded:
+Two fenced tables under ``table_path`` (``sinks.fold_epoch``), each
+bounded by the sketch size:
 
 - ``cms/`` — the count-min counter grid over the token stream
   (depth x width rows, integer counts): new batch's partial grid adds
@@ -17,14 +17,14 @@ because the WHOLE TABLE is bounded:
   merge is max-based (associative + commutative), so the streamed
   estimate equals the one-shot batch estimate exactly.
 
+Each micro-batch folds into each table under its epoch id. Counts are
+not idempotent, so the fence is what keeps a replayed batch from
+counting twice: a table whose fence covers the epoch skips it.
+
 Contrast with the other foreachBatch sinks (cdc/vector/near-dup
 index): those maintain O(corpus) tables and spend their design on
-touched-partition pruning; sketches need none of it — the read-back,
-merge, and rewrite all cost O(grid). At 100 TB the grid is still
-depth x width rows. The rewrite is read -> localCheckpoint -> full
-overwrite (the checkpoint breaks the read-own-write cycle); the same
-parquet non-atomicity caveat as cdc_sink applies between the two
-tables.
+touched-partition pruning; sketches need none of it — the fold reads
+and writes O(grid). At 100 TB the grid is still depth x width rows.
 """
 
 from __future__ import annotations
@@ -40,14 +40,16 @@ from dns_log_transformer_spark.operators.sketches import (
     CMS_WIDTH,
     cms_counters,
 )
-from dns_log_transformer_spark.streaming.cdc_sink import _require_local_path
+from dns_log_transformer_spark.streaming.sinks import (
+    fold_epoch,
+    read_base,
+    require_local_path,
+)
 
 
 def read_cms(spark: SparkSession, table_path: str) -> DataFrame | None:
     """The accumulated counter grid: (j, h, c). None before any batch."""
-    _require_local_path(table_path)
-    p = os.path.join(table_path, "cms")
-    return spark.read.parquet(p) if os.path.isdir(p) else None
+    return read_base(spark, os.path.join(table_path, "cms"))[1]
 
 
 def read_source_sketches(
@@ -55,11 +57,10 @@ def read_source_sketches(
 ) -> DataFrame | None:
     """Per-source distinct-doc estimates: (source, est_docs) from the
     accumulated HLL sketches. None before any batch."""
-    _require_local_path(table_path)
-    p = os.path.join(table_path, "sources")
-    if not os.path.isdir(p):
+    sketches = read_base(spark, os.path.join(table_path, "sources"))[1]
+    if sketches is None:
         return None
-    return spark.read.parquet(p).select(
+    return sketches.select(
         "source",
         F.hll_sketch_estimate("sk").cast("long").alias("est_docs"),
     )
@@ -77,36 +78,27 @@ def sketch_table_sink(
 ) -> StreamingQuery:
     """Start the incremental sketch upkeep over a streaming DataFrame of
     (id, text, source) document rows. Returns the StreamingQuery."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
     cms_path = os.path.join(table_path, "cms")
     src_path = os.path.join(table_path, "sources")
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
+    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-
-        # CMS: batch partial grid + stored grid, summed cell-wise
-        grid = cms_counters(batch_df, text_col, depth, width)
-        if os.path.isdir(cms_path):
-            grid = grid.unionByName(spark.read.parquet(cms_path))
-        grid = (
-            grid.groupBy("j", "h").agg(F.sum("c").alias("c")).localCheckpoint()
+        fold_epoch(
+            cms_counters(batch_df, text_col, depth, width),
+            epoch_id,
+            cms_path,
+            ["j", "h"],
+            [F.sum("c").alias("c")],
         )
-        grid.write.mode("overwrite").parquet(cms_path)
-
-        # HLL: batch per-source sketches unioned into the stored ones
-        sk = batch_df.groupBy(source_col).agg(
-            F.hll_sketch_agg(id_col).alias("sk")
+        fold_epoch(
+            batch_df.groupBy(source_col).agg(F.hll_sketch_agg(id_col).alias("sk")),
+            epoch_id,
+            src_path,
+            [source_col],
+            [F.hll_union_agg("sk").alias("sk")],
         )
-        if os.path.isdir(src_path):
-            sk = sk.unionByName(spark.read.parquet(src_path))
-        sk = (
-            sk.groupBy(source_col)
-            .agg(F.hll_union_agg("sk").alias("sk"))
-            .localCheckpoint()
-        )
-        sk.write.mode("overwrite").parquet(src_path)
 
     return (
         docs.writeStream.foreachBatch(merge_batch)

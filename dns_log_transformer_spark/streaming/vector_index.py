@@ -42,12 +42,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from dns_log_transformer_spark.operators import cdc, similarity
-from dns_log_transformer_spark.streaming.cdc_sink import (
-    N_BUCKETS_DEFAULT,
-    _has_partitions,
-    _require_local_path,
-    _with_bucket,
+from dns_log_transformer_spark.operators import similarity
+from dns_log_transformer_spark.streaming.cdc_sink import N_BUCKETS_DEFAULT
+from dns_log_transformer_spark.streaming.sinks import (
+    has_partitions,
+    merge_touched_buckets,
+    overwrite_partitions,
+    require_local_path,
+    with_bucket,
 )
 
 
@@ -57,9 +59,9 @@ def read_index(
     """The live index: (vec_id, version, embedding, cell), cell-
     partitioned so an IVF query's probed-cell read prunes to its
     partitions. None if nothing has been written yet."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
     cells = os.path.join(table_path, "cells")
-    if not _has_partitions(cells, "cell="):
+    if not has_partitions(cells, "cell="):
         return None
     return spark.read.parquet(cells)
 
@@ -80,7 +82,7 @@ def ivf_index_sink(
     streaming DataFrame of (id, version, op, embedding) change rows;
     each micro-batch folds into the directory + cell table at
     ``table_path``. Returns the StreamingQuery."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
     dir_path = os.path.join(table_path, "directory")
     cells_path = os.path.join(table_path, "cells")
 
@@ -100,26 +102,13 @@ def ivf_index_sink(
         assigned = similarity.ivf_assign(
             ups, codebook, id_col=id_col, vec_col=vec_col
         ).withColumn("cell", F.col("cell").cast("int")).unionByName(dels)
-        batch = _with_bucket(assigned, id_col, n_buckets).localCheckpoint()
+        batch = with_bucket(assigned, id_col, n_buckets).localCheckpoint()
         keys = batch.select(id_col).distinct()
-        touched_kb = [r["_kb"] for r in batch.select("_kb").distinct().collect()]
 
         # 2. directory merge (cdc_sink shape: touched buckets only)
-        old_dir = None
-        if _has_partitions(dir_path, "_kb="):
-            old_dir = spark.read.parquet(dir_path).filter(
-                F.col("_kb").isin(touched_kb)
-            )
-        alld = batch if old_dir is None else old_dir.unionByName(batch)
-        merged = cdc.upsert_latest(
-            alld,
-            [id_col, "_kb"],
-            version_col,
-            op_col,
-            delete_op,
-            keep_tombstones=True,
-            tiebreak_cols=[op_col],
-        ).localCheckpoint()
+        merged, old_dir = merge_touched_buckets(
+            batch, dir_path, id_col, version_col, op_col, delete_op
+        )
 
         # 3. the cell partitions to rewrite: wherever a batch key lived
         #    before (its directory cell) plus wherever it lands now —
@@ -140,7 +129,7 @@ def ivf_index_sink(
         live = winners.filter(F.col(op_col) != delete_op).select(
             id_col, version_col, vec_col, "cell"
         )
-        if touched_cells and _has_partitions(cells_path, "cell="):
+        if touched_cells and has_partitions(cells_path, "cell="):
             keep = (
                 spark.read.parquet(cells_path)
                 .filter(F.col("cell").isin(touched_cells))
@@ -148,12 +137,8 @@ def ivf_index_sink(
             )
             live = keep.unionByName(live)
         live = live.localCheckpoint()
-        merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("_kb").parquet(dir_path)
-        live.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(cells_path)
+        overwrite_partitions(merged, dir_path, "_kb")
+        overwrite_partitions(live, cells_path, "cell")
         # 5. a touched cell that ended EMPTY never appears in `live`,
         #    and dynamic overwrite only replaces partitions present in
         #    the written data — the old files would survive and deleted

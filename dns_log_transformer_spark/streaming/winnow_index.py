@@ -76,10 +76,13 @@ from dns_log_transformer_spark.operators.corpus import (
     hash_bucket,
     merge_anchor_spans,
 )
-from dns_log_transformer_spark.streaming.cdc_sink import (
-    N_BUCKETS_DEFAULT,
-    _has_partitions,
-    _require_local_path,
+from dns_log_transformer_spark.streaming.cdc_sink import N_BUCKETS_DEFAULT
+from dns_log_transformer_spark.streaming.sinks import (
+    drop_seen_ids,
+    has_partitions,
+    overwrite_partitions,
+    require_local_path,
+    touched_buckets,
 )
 
 
@@ -87,9 +90,9 @@ def read_spans(spark: SparkSession, table_path: str) -> DataFrame | None:
     """The current span table: (doc_id, span_start, span_len,
     n_anchors) for every doc with a shared span. None before any
     batch has produced spans."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
     spans = os.path.join(table_path, "spans")
-    if not _has_partitions(spans, "_kb="):
+    if not has_partitions(spans, "_kb="):
         return None
     return spark.read.parquet(spans).drop("_kb")
 
@@ -114,7 +117,7 @@ def winnow_index_sink(
     ``compact_max_files`` (optional) turns on SELF-compaction at the
     end of each batch — see neardup_index.neardup_index_sink; same
     trigger, same quiesced-by-construction safety."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
         merge_docs_batch(
@@ -153,7 +156,7 @@ def merge_docs_batch(
     convention). ``_fail_after`` ('spans' | 'fpagg') injects a crash
     immediately after that write for the crash-window pins in
     test_streaming — the write order it probes is load-bearing."""
-    _require_local_path(table_path)
+    require_local_path(table_path)
     anchors_path = os.path.join(table_path, "anchors")
     fpagg_path = os.path.join(table_path, "fpagg")
     spans_path = os.path.join(table_path, "spans")
@@ -182,17 +185,7 @@ def merge_docs_batch(
         .withColumn("_kb", kb(F.col(id_col)))
         .localCheckpoint()
     )
-    if _has_partitions(anchors_path, "_kb="):
-        seen_kb = [r["_kb"] for r in anch_b.select("_kb").distinct().collect()]
-        seen = (
-            spark.read.parquet(anchors_path)
-            .filter(F.col("_kb").isin(seen_kb))
-            .select(id_col)
-            .distinct()
-        )
-        anch_b = anch_b.join(
-            F.broadcast(seen), id_col, "left_anti"
-        ).localCheckpoint()
+    anch_b = drop_seen_ids(anch_b, anchors_path, id_col)
     if anch_b.isEmpty():
         return
 
@@ -205,9 +198,9 @@ def merge_docs_batch(
         .agg(F.min(id_col).alias("mn"), F.max(id_col).alias("mx"))
         .withColumn("_fb", fb(F.col("fp")))
     )
-    touched_fb = [r["_fb"] for r in bfp.select("_fb").distinct().collect()]
+    touched_fb = touched_buckets(bfp, "_fb")
     old_t = None
-    if _has_partitions(fpagg_path, "_fb="):
+    if has_partitions(fpagg_path, "_fb="):
         old_t = (
             spark.read.parquet(fpagg_path)
             .filter(F.col("_fb").isin(touched_fb))
@@ -249,16 +242,11 @@ def merge_docs_batch(
         #    so a crash between them replays cleanly (see the write
         #    ordering note below); re-derived with the exact
         #    batch-operator islands code
-        aff_kb = [
-            r["_kb"]
-            for r in aff.select(kb(F.col(id_col)).alias("_kb"))
-            .distinct()
-            .collect()
-        ]
+        aff_kb = touched_buckets(aff.select(kb(F.col(id_col)).alias("_kb")))
         aff_anch = anch_b.join(F.broadcast(aff), id_col, "left_semi").select(
             id_col, "pos", "fp"
         )
-        if _has_partitions(anchors_path, "_kb="):
+        if has_partitions(anchors_path, "_kb="):
             old_anch = (
                 spark.read.parquet(anchors_path)
                 .filter(F.col("_kb").isin(aff_kb))
@@ -266,16 +254,13 @@ def merge_docs_batch(
                 .select(id_col, "pos", "fp")
             )
             aff_anch = aff_anch.unionByName(old_anch)
-        need_fb = [
-            r["_fb"]
-            for r in aff_anch.select(fb(F.col("fp")).alias("_fb"))
-            .distinct()
-            .collect()
-        ]
+        need_fb = touched_buckets(
+            aff_anch.select(fb(F.col("fp")).alias("_fb")), "_fb"
+        )
         shared_fps = merged_part.filter(
             F.col("mn") != F.col("mx")
         ).select("fp")
-        if _has_partitions(fpagg_path, "_fb="):
+        if has_partitions(fpagg_path, "_fb="):
             # fps of affected docs living in partitions this batch
             # did NOT touch are unchanged — their status comes from
             # the store as it stands (still pre-overwrite)
@@ -293,7 +278,7 @@ def merge_docs_batch(
         new_spans = merge_anchor_spans(
             sa, id_col=id_col, k=k, min_anchors=min_anchors
         ).withColumn("_kb", kb(F.col(id_col)))
-        if _has_partitions(spans_path, "_kb="):
+        if has_partitions(spans_path, "_kb="):
             keep = (
                 spark.read.parquet(spans_path)
                 .filter(F.col("_kb").isin(aff_kb))
@@ -301,9 +286,7 @@ def merge_docs_batch(
             )
             new_spans = keep.unionByName(new_spans)
         new_spans = new_spans.localCheckpoint()
-        new_spans.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("_kb").parquet(spans_path)
+        overwrite_partitions(new_spans, spans_path, "_kb")
     if _fail_after == "spans":
         raise RuntimeError("injected crash after the spans write")
 
@@ -317,9 +300,7 @@ def merge_docs_batch(
     #    prior-sole set is empty but those docs' spans were already
     #    written by the crashed run (and the keep-side anti-join
     #    preserves them).
-    merged_part.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("_fb").parquet(fpagg_path)
+    overwrite_partitions(merged_part, fpagg_path, "_fb")
     if _fail_after == "fpagg":
         raise RuntimeError("injected crash after the fpagg write")
     anch_b.write.mode("append").partitionBy("_kb").parquet(anchors_path)

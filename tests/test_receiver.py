@@ -97,6 +97,35 @@ def test_receiver_rejects_bad_content_length(tmp_path):
         rx.stop()
 
 
+def test_receiver_refuses_oversized_body_unread(tmp_path):
+    """A Content-Length above MAX_REQUEST_BODY_BYTES gets a Firehose-shaped
+    413 before any body byte is read: the request sends its headers only,
+    so a receiver that tried to read the body would block instead of
+    replying. Nothing lands."""
+    from dns_log_transformer_spark.schemas import MAX_REQUEST_BODY_BYTES
+
+    landing = str(tmp_path / "landing")
+    rx = FirehoseReceiver(landing, host="127.0.0.1").start()
+    try:
+        conn = http.client.HTTPConnection("127.0.0.1", rx.port, timeout=10)
+        try:
+            conn.putrequest("POST", "/endpoint")
+            conn.putheader("Content-Type", "application/json")
+            conn.putheader("Content-Length", str(MAX_REQUEST_BODY_BYTES + 1))
+            conn.endheaders()
+            resp = conn.getresponse()
+            body = json.loads(resp.read())
+        finally:
+            conn.close()
+        assert resp.status == 413
+        assert body["requestId"] == "unknown"
+        assert isinstance(body["timestamp"], int)
+        assert str(MAX_REQUEST_BODY_BYTES) in body["errorMessage"]
+        assert os.listdir(landing) == []
+    finally:
+        rx.stop()
+
+
 def test_receiver_lands_pretty_printed_body_as_one_line(spark, tmp_path):
     """An indented JSON body (CR/LF between tokens) is valid Firehose input.
     The landing source splits on CR/LF, so landed verbatim it became nine

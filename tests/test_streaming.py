@@ -1573,40 +1573,188 @@ def test_mv_sink_exactly_once_under_replay_and_compaction(spark, tmp_path):
     assert not _os.path.isdir(_os.path.join(table, "_epoch=-1"))
 
 
-def test_mv_compaction_migrates_legacy_format(spark, tmp_path):
-    """A table written by the pre-rework compactor — base in the
-    ``_epoch=-1`` partition, fence json carrying only folded_thru —
-    must read correctly, fold into a fence-named base dir on the next
-    compaction, and never count the legacy partition twice."""
-    import json as _json
-    import os as _os
+def _sketch_docs(spark):
+    return [
+        (r["doc_id"], r["text"], r["source"])
+        for r in spark.read.parquet(
+            "/root/testdata/sf0.001/documents.parquet"
+        )
+        .select("doc_id", "text", "source")
+        .collect()
+    ]
+
+
+def _write_sketch_docs(path, rows):
+    with open(path, "w") as f:
+        for d, t, s in rows:
+            f.write(json.dumps({"doc_id": d, "text": t, "source": s}) + "\n")
+
+
+def _sketch_state(spark, table):
+    """(CMS grid, per-source HLL estimates) as the sketch sink's readers
+    see them."""
+    from dns_log_transformer_spark.streaming import read_cms, read_source_sketches
+
+    grid = {(r["j"], r["h"]): r["c"] for r in read_cms(spark, table).collect()}
+    est = {
+        r["source"]: r["est_docs"]
+        for r in read_source_sketches(spark, table).collect()
+    }
+    return grid, est
+
+
+def _batch_sketch_state(spark, rows):
+    """The one-shot batch grid and estimates of ``rows``."""
+    from dns_log_transformer_spark.operators.sketches import cms_counters
+
+    full = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    grid = {(r["j"], r["h"]): r["c"] for r in cms_counters(full).collect()}
+    est = {
+        r["source"]: r["est_docs"]
+        for r in full.groupBy("source")
+        .agg(
+            F.hll_sketch_estimate(F.hll_sketch_agg("doc_id"))
+            .cast("long")
+            .alias("est_docs")
+        )
+        .collect()
+    }
+    return grid, est
+
+
+def _sketch_query(spark, src, table, ck):
+    from dns_log_transformer_spark.streaming import sketch_table_sink
+
+    stream = spark.readStream.schema(
+        "doc_id long, text string, source string"
+    ).json(str(src))
+    return sketch_table_sink(stream, table, str(ck))
+
+
+def test_sketch_table_sink_replayed_batch_counts_once(spark, tmp_path):
+    """A crash after the sink's write but before the commit log records
+    the batch replays it under the same epoch id. Deleting the
+    checkpoint's last ``commits/<id>`` is that state. The fence must
+    make the replay a no-op: the CMS grid is not idempotent, so a
+    second fold of the batch would double every cell it touches."""
+    docs = _sketch_docs(spark)[:300]
+    src = tmp_path / "docs"
+    src.mkdir()
+    table, ck = str(tmp_path / "sketches"), tmp_path / "ck"
+    q = _sketch_query(spark, src, table, ck)
+    try:
+        for i, chunk in enumerate([docs[0::2], docs[1::2]]):
+            _write_sketch_docs(src / f"b{i}.json", chunk)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    want = _batch_sketch_state(spark, docs)
+    assert len(want[0]) > 0
+    assert _sketch_state(spark, table) == want
+
+    last = max(int(n) for n in os.listdir(ck / "commits") if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        os.remove(ck / "commits" / name)
+    q = _sketch_query(spark, src, table, ck)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert (ck / "commits" / str(last)).exists()  # the batch did replay
+    assert _sketch_state(spark, table) == want
+
+
+def test_sketch_sink_crash_before_fence_commit_keeps_old_state(
+    spark, tmp_path, monkeypatch
+):
+    """A failure between a table's ``_base_e<N>`` write and its fence
+    replace leaves that table's readers on the previous state, and the
+    replay converges. The sink folds two tables per batch, so a crash
+    at the second commit leaves the first one committed: its replay
+    must skip it, not count it twice."""
+    import pytest
+
+    from dns_log_transformer_spark.streaming import sinks
+
+    real_commit = sinks._commit_fence
+
+    def crash_at(table_name):
+        def commit(table_path, epoch, base):
+            if os.path.basename(table_path) == table_name:
+                raise RuntimeError("injected crash before the fence commit")
+            real_commit(table_path, epoch, base)
+
+        return commit
+
+    docs = _sketch_docs(spark)[:300]
+    first, second = docs[0::2], docs[1::2]
+    src = tmp_path / "docs"
+    src.mkdir()
+    table, ck = str(tmp_path / "sketches"), tmp_path / "ck"
+    q = _sketch_query(spark, src, table, ck)
+    try:
+        _write_sketch_docs(src / "b0.json", first)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    old = _sketch_state(spark, table)
+    assert old == _batch_sketch_state(spark, first)
+    want = _batch_sketch_state(spark, docs)
+    assert old[0] != want[0] and old[1] != want[1]
+
+    _write_sketch_docs(src / "b1.json", second)
+    for crashed, readers in (("cms", old), ("sources", (want[0], old[1]))):
+        monkeypatch.setattr(sinks, "_commit_fence", crash_at(crashed))
+        q = _sketch_query(spark, src, table, ck)
+        try:
+            with pytest.raises(Exception, match="injected crash"):
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        # the uncommitted base sits next to the fenced one, unread
+        assert os.path.isdir(os.path.join(table, crashed, "_base_e1"))
+        assert _sketch_state(spark, table) == readers, crashed
+
+    monkeypatch.setattr(sinks, "_commit_fence", real_commit)
+    q = _sketch_query(spark, src, table, ck)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert _sketch_state(spark, table) == want
+    for name in ("cms", "sources"):
+        entries = os.listdir(os.path.join(table, name))
+        bases = [e for e in entries if e.startswith("_base_")]
+        assert bases == ["_base_e1"], (name, bases)
+
+
+def test_compact_mv_crash_before_fence_commit_keeps_old_view(
+    spark, tmp_path, monkeypatch
+):
+    """``compact_mv`` is the fenced fold over its pinned partials: a
+    failure between the ``_base_e<N>`` write and the fence replace
+    leaves read_mv on the previous base plus the unfolded partials, and
+    the next compaction folds them exactly once."""
+    import pytest
 
     from dns_log_transformer_spark.streaming import (
         compact_mv,
         merge_epoch,
         read_mv,
+        sinks,
     )
 
-    table = str(tmp_path / "mv_legacy")
-    # legacy state: folded base for epochs 0-1 at _epoch=-1, fence
-    # {folded_thru: 1} with no base name, plus a live epoch-2 partial
-    base = (
-        spark.createDataFrame(
-            [(1, 2, 300), (2, 1, 50)], "key long, n_rows long, sum_val long"
-        )
-        .withColumn("_epoch", F.lit(-1))
-    )
-    base.write.mode("overwrite").partitionBy("_epoch").parquet(table)
-    with open(_os.path.join(table, "_FENCE"), "w") as f:
-        _json.dump({"folded_thru": 1}, f)
-    merge_epoch(
-        spark.createDataFrame([(1, 7), (3, 9)], "key long, cents long"),
-        2,
-        table,
-        "key",
-        "cents",
-    )
-    want = {1: (3, 307), 2: (1, 50), 3: (1, 9)}
+    table = str(tmp_path / "mv")
+    facts = spark.createDataFrame([(k % 7, k) for k in range(100)], "k long, v long")
+    for e in range(5):
+        merge_epoch(facts, e, table, "k", "v")
+        if e == 2:
+            compact_mv(spark, table)
+    want = {
+        key: (5 * sum(1 for k in range(100) if k % 7 == key),
+              5 * sum(k for k in range(100) if k % 7 == key))
+        for key in range(7)
+    }
 
     def got():
         return {
@@ -1614,27 +1762,28 @@ def test_mv_compaction_migrates_legacy_format(spark, tmp_path):
             for r in read_mv(spark, table).collect()
         }
 
+    def epochs():
+        return sorted(e for e in os.listdir(table) if e.startswith("_epoch="))
+
     assert got() == want
-    # a replay of a folded epoch still no-ops under the legacy fence
-    merge_epoch(
-        spark.createDataFrame([(1, 999)], "key long, cents long"),
-        1,
-        table,
-        "key",
-        "cents",
-    )
+    assert sinks.read_fence(table) == (2, "_base_e2")
+
+    def crash(table_path, epoch, base):
+        raise RuntimeError("injected crash before the fence commit")
+
+    monkeypatch.setattr(sinks, "_commit_fence", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_mv(spark, table)
+    assert os.path.isdir(os.path.join(table, "_base_e4"))
+    assert sinks.read_fence(table) == (2, "_base_e2")
+    assert epochs() == ["_epoch=3", "_epoch=4"]
     assert got() == want
+
+    monkeypatch.undo()
     compact_mv(spark, table)
-    assert got() == want
-    assert not _os.path.isdir(_os.path.join(table, "_epoch=-1"))
-    assert not _os.path.isdir(_os.path.join(table, "_epoch=2"))
-    # the fence now names a base dir; re-resurrecting the legacy
-    # partition (crashed-GC shape) must not double-count
-    base.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("_epoch").parquet(table)
-    assert got() == want
-    compact_mv(spark, table)  # nothing to fold, but sweeps the ghost
+    assert sinks.read_fence(table) == (4, "_base_e4")
+    assert epochs() == []
+    assert not os.path.isdir(os.path.join(table, "_base_e2"))
     assert got() == want
 
 
