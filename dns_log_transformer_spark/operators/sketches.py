@@ -229,13 +229,3 @@ def bloom_hit_from_hashes(
         word = F.try_element_at(bits, F.floor(p / _WORD_BITS).cast("int") + 1)
         hit = hit & (F.bit_get(word, (p % _WORD_BITS).cast("int")) == 1)
     return hit
-
-
-def bloom_might_contain(
-    value: Column, words: list[int], k: int = BLOOM_K, m_bits: int = BLOOM_BITS
-) -> Column:
-    """One-shot probe for a value column; prefer materializing
-    `_bloom_h1h2` in a projection and calling `bloom_hit_from_hashes`
-    when the probe feeds filters or aggregations."""
-    h1, h2 = _bloom_h1h2(value)
-    return bloom_hit_from_hashes(h1, h2, words, k, m_bits)

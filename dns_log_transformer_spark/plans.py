@@ -31,21 +31,12 @@ def read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: struct<([^>]*)>", physical_plan(df))
 
 
-def exchange_count(df: DataFrame) -> int:
-    return len(re.findall(r"\bExchange\b", physical_plan(df)))
-
-
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df)
 
 
 def has_sort_merge_join(df: DataFrame) -> bool:
     return "SortMergeJoin" in physical_plan(df)
-
-
-def assert_no_exchange(df: DataFrame, context: str = "") -> None:
-    plan = physical_plan(df)
-    assert "Exchange" not in plan, f"{context}: plan contains a shuffle:\n{plan}"
 
 
 def assert_filter_pushed(df: DataFrame, fragment: str) -> None:

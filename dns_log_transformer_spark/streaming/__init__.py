@@ -3,17 +3,19 @@
 The reference is a streaming ETL service (HTTP push -> transform -> syslog,
 app/app.py:60-102,219-263). Spark is pull-based, so the idiomatic rebuild
 is: a thin receiver lands each HTTP request body as a file (one JSON
-envelope per line) and ``readStream`` tails the landing directory; ``start_pipeline`` runs ONE ``foreachBatch`` query that decodes
-each micro-batch once with the Milestone-1 batch transforms and writes the
-syslog datagrams (one UDP socket per partition), a parquet archive and a
-quarantine (dead-letter) from it.
+envelope per line) and ``readStream`` tails the landing directory;
+``start_pipeline`` runs ONE ``foreachBatch`` query that decodes each
+micro-batch once with the Milestone-1 batch transforms and, in one Spark
+job, sends the syslog datagrams (one UDP socket per partition) and
+writes a parquet archive and a quarantine (dead-letter) from it.
 
 Delivery semantics: the reference acks before processing (at-most-once,
 app/app.py:96-102). Here the file source replays an unfinished batch from
 the checkpoint. Archive and quarantine files are named by batch id, so a
-replay replaces them: exactly-once. Syslog datagrams are re-sent on
-replay: at-least-once. ``dedup_within_watermark`` is the operator for
-effectively-once on a record fingerprint downstream.
+replay replaces them: exactly-once. A fence in the checkpoint dir skips a
+batch already committed, so syslog datagrams are re-sent only for a batch
+that crashed mid-send: at-least-once. ``dedup_within_watermark`` is the
+operator for effectively-once on a record fingerprint downstream.
 """
 
 from dns_log_transformer_spark.streaming.source import (

@@ -1,21 +1,31 @@
-"""Per-micro-batch writers for the DNS pipeline's three outputs.
+"""Per-micro-batch writers for the DNS pipeline's outputs.
 
 ``streaming.pipeline`` runs one ``foreachBatch`` query; each micro-batch
-calls these on static DataFrames:
+hands ``emit_dns_batch`` one row set (a row per BIND9 line of a valid
+record, a row per invalid record) and it runs as ONE Spark job: a
+``mapInArrow`` pass over each partition does all of the batch's sink
+work, then the driver commits.
 
-- ``send_syslog`` emits one UDP syslog datagram per formatted line, as the
-  reference does for a hard-coded collector (app/app.py:17-32,253), from
-  ONE socket per partition — the sink-side batching the reference lacks
-  (SURVEY.md §4 "Batching at sink"). A datagram the kernel refuses (over
-  65,507 bytes, or ENOBUFS) is skipped and counted, like the reference's
-  SysLogHandler drops one record and goes on (app/app.py:22-23,253). UDP
-  is fire-and-forget, and a replayed batch sends its lines again: syslog
-  delivery is at-least-once from the pipeline and at-most-once past the
-  network.
-- ``write_batch_files`` writes flat parquet files whose names are fixed by
-  the batch id. A replayed batch replaces its own files instead of adding
-  copies, so the archive and quarantine are exactly-once without the file
-  sink's ``_spark_metadata`` log, and stay readable as ``<dir>/*.parquet``.
+- syslog: one UDP datagram per line, as the reference does for a
+  hard-coded collector (app/app.py:17-32,253), from ONE socket per
+  partition — the sink-side batching the reference lacks (SURVEY.md §4
+  "Batching at sink"). A datagram the kernel refuses (over 65,507
+  bytes, or ENOBUFS) is skipped and counted, like the reference's
+  SysLogHandler drops one record and goes on (app/app.py:22-23,253).
+  ``send_syslog`` is the same pass with syslog alone.
+- archive (the lines) and quarantine (the invalid records): each
+  partition streams its rows into one parquet file per output in the
+  batch's ``_stage-<batch_id>`` dir (which readers skip). The driver
+  then replaces the batch's earlier ``part-<batch_id>-<k>.parquet``
+  files with the staged ones, so a replayed batch replaces its own
+  files instead of adding copies, and the outputs stay readable as
+  ``<dir>/*.parquet`` without the file sink's ``_spark_metadata`` log.
+- ``emit_dns_batch`` records the highest committed batch id in a
+  ``_FENCE`` json in the query's checkpoint dir after the renames; a
+  batch the fence covers is a no-op, so replaying a committed batch
+  sends and writes nothing. A crash between the first send and the
+  fence replays the batch: syslog is at-least-once for that window,
+  and at-most-once past the network.
 
 The other ``foreachBatch`` sinks share the helpers below:
 
@@ -39,6 +49,7 @@ The other ``foreachBatch`` sinks share the helpers below:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -57,43 +68,145 @@ from dns_log_transformer_spark.operators.corpus import hash_bucket
 SYSLOG_PRI_DAEMON_INFO = 30
 
 
+def _schemas() -> dict[str, "pa.Schema"]:
+    """The archive's and the quarantine's parquet columns."""
+    import pyarrow as pa
+
+    return {
+        "archive": pa.schema(
+            [
+                ("requestId", pa.string()),
+                ("record_idx", pa.int32()),
+                ("line_no", pa.int32()),
+                ("kind", pa.string()),
+                ("line", pa.string()),
+            ]
+        ),
+        "quarantine": pa.schema(
+            [
+                ("requestId", pa.string()),
+                ("record_idx", pa.int32()),
+                ("data", pa.string()),
+                ("reject_reason", pa.string()),
+            ]
+        ),
+    }
+
+
+def _partition_pass(addr: tuple[str, int] | None, stages: dict[str, str]):
+    """The ``mapInArrow`` function of one batch. A row with a ``line`` is
+    an archive row and, when ``addr`` is set, a datagram; a row without
+    one is a quarantine row. Each output in ``stages`` (``archive`` or
+    ``quarantine`` -> stage dir) gets one parquet file per partition,
+    opened on its first row, fed per Arrow batch and renamed from a
+    temp name to ``part-<partition>.parquet`` when the partition ends,
+    so a retried task replaces its earlier attempt's file. Yields one
+    row of counts. Refers to no function of this package, so the Python
+    workers need not import it."""
+    import pyarrow as pa
+
+    schemas = _schemas()
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}.parquet"
+        tmp = f"{name}.{ctx.attemptNumber()}.tmp"
+        writers: dict[str, pq.ParquetWriter] = {}
+        n = {"archive": 0, "quarantine": 0}
+        skipped = 0
+        with contextlib.ExitStack() as stack:
+            sock = None
+            if addr is not None:
+                sock = stack.enter_context(socket.socket(socket.AF_INET, socket.SOCK_DGRAM))
+            for batch in batches:
+                has_line = pc.is_valid(batch.column("line"))
+                parts = {"archive": batch.filter(has_line)}
+                if sock is not None:
+                    for line in parts["archive"].column("line").to_pylist():
+                        datagram = f"<{SYSLOG_PRI_DAEMON_INFO}>{line}"
+                        try:
+                            sock.sendto(datagram.encode("utf-8", errors="replace"), addr)
+                        except OSError:
+                            skipped += 1
+                if not stages:
+                    continue
+                parts["quarantine"] = batch.filter(pc.invert(has_line))
+                for out, stage in stages.items():
+                    rows = parts[out]
+                    if rows.num_rows == 0:
+                        continue
+                    if out not in writers:
+                        writers[out] = pq.ParquetWriter(os.path.join(stage, tmp), schemas[out])
+                        stack.callback(writers[out].close)
+                    writers[out].write_batch(rows.select(schemas[out].names).cast(schemas[out]))
+                    n[out] += rows.num_rows
+        for out in writers:
+            os.replace(os.path.join(stages[out], tmp), os.path.join(stages[out], name))
+        yield pa.RecordBatch.from_pydict(
+            {"archive": [n["archive"]], "quarantine": [n["quarantine"]], "skipped": [skipped]}
+        )
+
+    return run
+
+
+def _run_pass(rows: DataFrame, addr: tuple[str, int] | None, stages: dict[str, str]) -> dict[str, int]:
+    counts = rows.mapInArrow(
+        _partition_pass(addr, stages), "archive long, quarantine long, skipped long"
+    ).collect()
+    return {k: sum(r[k] for r in counts) for k in ("archive", "quarantine", "skipped")}
+
+
 def send_syslog(lines: DataFrame, host: str, port: int) -> int:
     """Send each row's ``line`` as one syslog datagram to ``host:port``.
 
     Runs as one Spark job; each partition opens one socket. Returns the
     number of datagrams skipped because ``sendto`` failed.
     """
-    import pyarrow as pa
-
-    addr = (host, port)
-
-    def send(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        skipped = 0
-        with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as sock:
-            for batch in batches:
-                for line in batch.column(0).to_pylist():
-                    datagram = f"<{SYSLOG_PRI_DAEMON_INFO}>{line}"
-                    try:
-                        sock.sendto(datagram.encode("utf-8", errors="replace"), addr)
-                    except OSError:
-                        skipped += 1
-        yield pa.RecordBatch.from_pydict({"skipped": [skipped]})
-
-    counts = lines.select("line").mapInArrow(send, "skipped long").collect()
-    return sum(r.skipped for r in counts)
+    return _run_pass(lines.select("line"), (host, port), {})["skipped"]
 
 
-def write_batch_files(df: DataFrame, path: str, batch_id: int) -> None:
-    """Write ``df`` as ``<path>/part-<batch_id>-<k>.parquet``, replacing
-    the files an earlier attempt of the same batch left there.
+def emit_dns_batch(
+    rows: DataFrame,
+    batch_id: int,
+    addr: tuple[str, int] | None,
+    dirs: dict[str, str],
+    fence_dir: str,
+) -> int:
+    """One micro-batch's sink work in one Spark job (module docstring):
+    send the lines to ``addr`` (None: no syslog) and replace the batch's
+    files in ``dirs`` (``archive`` and ``quarantine`` -> dir; empty: no
+    files). ``rows`` carries ``line`` (NULL on quarantine rows) and the
+    columns of both outputs. A batch with no rows for an output still
+    leaves one schema-only file. The ``_FENCE`` in ``fence_dir`` records
+    the batch last; a batch it already covers is a no-op. Returns the
+    number of datagrams skipped."""
+    import pyarrow.parquet as pq
 
-    Spark writes into the ``_``-prefixed staging dir ``_stage-<batch_id>``
-    (which readers skip); then this batch's old files are deleted and the
-    staged ones renamed into place. A crash at any point leaves files the
-    replay of the batch deletes or overwrites. ``path`` is driver-local.
-    """
-    stage = os.path.join(path, f"_stage-{batch_id}")
-    df.write.mode("overwrite").parquet(stage)
+    if batch_id <= read_fence(fence_dir)[0]:
+        return 0
+    stages = {out: os.path.join(path, f"_stage-{batch_id}") for out, path in dirs.items()}
+    for stage in stages.values():
+        shutil.rmtree(stage, ignore_errors=True)
+        os.makedirs(stage)
+    counts = _run_pass(rows, addr, stages)
+    for out, path in dirs.items():
+        if counts[out] == 0:
+            empty = _schemas()[out].empty_table()
+            pq.write_table(empty, os.path.join(stages[out], "part-00000.parquet"))
+        _commit_stage(path, stages[out], batch_id)
+    os.makedirs(fence_dir, exist_ok=True)
+    _commit_fence(fence_dir, batch_id, None)
+    return counts["skipped"]
+
+
+def _commit_stage(path: str, stage: str, batch_id: int) -> None:
+    """Replace ``<path>/part-<batch_id>-*.parquet`` with the staged
+    files. A crash at any point leaves files the replay of the batch
+    deletes or overwrites."""
     prefix = f"part-{batch_id}-"
     for name in os.listdir(path):
         if name.startswith(prefix):
@@ -214,7 +327,8 @@ def drop_seen_ids(batch: DataFrame, store_path: str, id_col: str) -> DataFrame:
     return batch.join(F.broadcast(seen), id_col, "left_anti").localCheckpoint()
 
 
-#: The fenced table's commit record: {"folded_thru": N, "base": dir}.
+#: The fenced table's commit record: {"folded_thru": N, "base": dir}
+#: (base null for the DNS pipeline's fence, which names no table).
 FENCE = "_FENCE"
 
 
@@ -242,7 +356,7 @@ def read_base(
     return fence, spark.read.parquet(os.path.join(table_path, base))
 
 
-def _commit_fence(table_path: str, epoch: int, base: str) -> None:
+def _commit_fence(table_path: str, epoch: int, base: str | None) -> None:
     tmp = os.path.join(table_path, FENCE + ".tmp")
     with open(tmp, "w") as f:
         json.dump({"folded_thru": epoch, "base": base}, f)

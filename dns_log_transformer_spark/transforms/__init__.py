@@ -14,9 +14,13 @@ from dns_log_transformer_spark.transforms.envelope import (
 from dns_log_transformer_spark.transforms.decode import decode_records
 from dns_log_transformer_spark.transforms.validate import (
     dns_validity_predicate,
+    reject_reason,
     split_valid_invalid,
+    with_validity,
 )
 from dns_log_transformer_spark.transforms.bind9 import (
+    bind9_lines,
+    line_kind,
     to_bind9_lines,
     to_microsoft_dns_lines,
     with_client_hex,
@@ -27,7 +31,11 @@ __all__ = [
     "explode_records",
     "decode_records",
     "dns_validity_predicate",
+    "reject_reason",
     "split_valid_invalid",
+    "with_validity",
+    "bind9_lines",
+    "line_kind",
     "to_bind9_lines",
     "to_microsoft_dns_lines",
     "with_client_hex",

@@ -67,11 +67,11 @@ def _line_prefix(syslog_ts: Column, bind9_ts: Column) -> Column:
     )
 
 
-def to_bind9_lines(validated: DataFrame, keep: list[str] | None = None) -> DataFrame:
-    """Validated DNS records (+ client_hex) -> one row per BIND9 line.
-
-    Output: ``keep`` passthrough columns + line_no (0 = query, 1..N =
-    replies, preserving answer order) + kind ('query'|'reply') + line.
+def bind9_lines(ts: Column) -> Column:
+    """One record's BIND9 lines as an array, query line first: the
+    formatter ``to_bind9_lines`` explodes and the streaming pipeline
+    sends. Reads the flattened DNS fields and ``client_hex``; ``ts`` is
+    the parsed ``query_timestamp``.
 
     Semantics pinned to the reference:
     - query line qtype is answers[0].Type, NOT the record's query_type
@@ -80,14 +80,6 @@ def to_bind9_lines(validated: DataFrame, keep: list[str] | None = None) -> DataF
     - one reply line per answer, rdata NULL -> 'N/A' (app/app.py:166-171);
     - query line first, replies in answer order (app/app.py:163-171).
     """
-    keep = keep if keep is not None else []
-    if "client_hex" not in validated.columns:
-        validated = with_client_hex(validated)
-    ts = (
-        F.col("query_ts")
-        if "query_ts" in validated.columns
-        else F.to_timestamp(F.col("query_timestamp"), QUERY_TS_FORMAT)
-    )
     syslog_ts, bind9_ts = _timestamps(ts)
     prefix = _line_prefix(syslog_ts, bind9_ts)
 
@@ -114,12 +106,32 @@ def to_bind9_lines(validated: DataFrame, keep: list[str] | None = None) -> DataF
             F.coalesce(a["Rdata"], F.lit("N/A")),
         ),
     )
-    lines = F.concat(F.array(query_line), reply_lines)
+    return F.concat(F.array(query_line), reply_lines)
+
+
+def line_kind(line_no: Column) -> Column:
+    """'query' for line 0, 'reply' for the rest."""
+    return F.when(line_no == 0, F.lit("query")).otherwise(F.lit("reply"))
+
+
+def to_bind9_lines(validated: DataFrame, keep: list[str] | None = None) -> DataFrame:
+    """Validated DNS records (+ client_hex) -> one row per BIND9 line.
+
+    Output: ``keep`` passthrough columns + line_no (0 = query, 1..N =
+    replies, preserving answer order) + kind ('query'|'reply') + line;
+    the lines are ``bind9_lines``, exploded.
+    """
+    keep = keep if keep is not None else []
+    if "client_hex" not in validated.columns:
+        validated = with_client_hex(validated)
+    ts = (
+        F.col("query_ts")
+        if "query_ts" in validated.columns
+        else F.to_timestamp(F.col("query_timestamp"), QUERY_TS_FORMAT)
+    )
     return validated.select(
-        *keep, F.posexplode(lines).alias("line_no", "line")
-    ).withColumn(
-        "kind", F.when(F.col("line_no") == 0, F.lit("query")).otherwise(F.lit("reply"))
-    ).select(*keep, "line_no", "kind", "line")
+        *keep, F.posexplode(bind9_lines(ts)).alias("line_no", "line")
+    ).withColumn("kind", line_kind(F.col("line_no"))).select(*keep, "line_no", "kind", "line")
 
 
 def to_microsoft_dns_lines(validated: DataFrame, keep: list[str] | None = None) -> DataFrame:

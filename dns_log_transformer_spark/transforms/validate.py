@@ -80,6 +80,24 @@ def reject_reason(dns: Column, decoded: Column) -> Column:
     return reason
 
 
+def with_validity(decoded: DataFrame, dns_col: str = "dns") -> DataFrame:
+    """``decoded`` plus the boolean ``_valid`` (``dns_validity_predicate``).
+
+    The column is produced through ``explode(array(ok))`` — a 1:1
+    Generate node acting as an optimizer barrier. Without it, predicate
+    pushdown substitutes the ~20-term validity conjunction down through
+    the parse/decode projections, and because those expressions sit
+    inside CaseWhen branches (where codegen subexpression elimination
+    does not apply) the JSON parse re-executes once per substituted term
+    — measured 10-40x slower at 100k rows. Expressions over ``_valid``
+    cannot be pushed below the Generate that produces it, so the parse
+    runs exactly once per row. (A rand()-based guard does not survive:
+    Spark 4's optimizer constant-folds always-true rand comparisons.)
+    """
+    ok = dns_validity_predicate(F.col(dns_col))
+    return decoded.select("*", F.explode(F.array(ok)).alias("_valid"))
+
+
 def split_valid_invalid(
     decoded: DataFrame, dns_col: str = "dns", decoded_col: str = "decoded"
 ) -> tuple[DataFrame, DataFrame]:
@@ -87,21 +105,11 @@ def split_valid_invalid(
     plus a parsed ``query_ts`` timestamp; quarantine rows keep the raw
     payload and a reject_reason. One source scan feeds both (Spark reuses
     the exchange under AQE; at scale write quarantine first or cache).
-
-    The validity column is produced through ``explode(array(ok))`` — a
-    1:1 Generate node acting as an optimizer barrier. Without it,
-    predicate pushdown substitutes the ~20-term validity conjunction down
-    through the parse/decode projections, and because those expressions
-    sit inside CaseWhen branches (where codegen subexpression elimination
-    does not apply) the JSON parse re-executes once per substituted term
-    — measured 10-40x slower at 100k rows. Filters on ``_valid`` cannot
-    be pushed below the Generate that produces it, so the parse runs
-    exactly once per row. (A rand()-based guard does not survive: Spark
-    4's optimizer constant-folds always-true rand comparisons.)
+    Both split ``with_validity``'s ``_valid``, so the parse runs once per
+    row.
     """
     dns = F.col(dns_col)
-    ok = dns_validity_predicate(dns)
-    enriched = decoded.select("*", F.explode(F.array(ok)).alias("_valid"))
+    enriched = with_validity(decoded, dns_col)
     valid = (
         enriched.filter(F.col("_valid"))
         .select(

@@ -202,6 +202,167 @@ def test_syslog_skips_oversize_datagram(spark, tmp_path, caplog):
     assert "batch 0: 2 syslog datagrams not sent" in caplog.text
 
 
+ARCHIVE_DTYPES = [
+    ("requestId", "string"),
+    ("record_idx", "int"),
+    ("line_no", "int"),
+    ("kind", "string"),
+    ("line", "string"),
+]
+QUARANTINE_DTYPES = [
+    ("requestId", "string"),
+    ("record_idx", "int"),
+    ("data", "string"),
+    ("reject_reason", "string"),
+]
+
+
+def _wait_for(collector: UdpCollector, n: int, timeout: float = 10) -> None:
+    deadline = time.monotonic() + timeout
+    while len(collector.datagrams) < n and time.monotonic() < deadline:
+        time.sleep(0.05)
+    time.sleep(0.2)  # let stragglers, if any, arrive too
+
+
+def _mixed_batch(spark, request_id: str = "r0"):
+    """One envelope: two valid records (2 and 3 lines) and one poisoned."""
+    recs = [
+        make_record(query_name="a.example.com."),
+        make_record(
+            query_name="b.example.com.",
+            answers=[{"Rdata": "1.2.3.4", "Type": "A"}, {"Rdata": "5.6.7.8", "Type": "A"}],
+        ),
+        make_record(query_timestamp="bad"),
+    ]
+    return spark.createDataFrame([(envelope_json(recs, request_id=request_id),)], ["value"])
+
+
+def test_pipeline_batch_is_one_spark_job(spark, tmp_path):
+    """A micro-batch with syslog, archive and quarantine runs one Spark
+    job, and archive and syslog carry the same rand() client ids."""
+    from dns_log_transformer_spark.streaming.pipeline import batch_writer
+
+    work = str(tmp_path / "work")
+    sc = spark.sparkContext
+    collector = UdpCollector()
+    try:
+        write = batch_writer(work, "127.0.0.1", collector.port, archive=True, deterministic_ids=False)
+        raw = _mixed_batch(spark)
+        group = f"one-job-{os.getpid()}"
+        sc.setJobGroup(group, "dns batch")
+        try:
+            write(raw, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        _wait_for(collector, 5)
+    finally:
+        collector.stop()
+    archived = spark.read.parquet(os.path.join(work, "archive")).collect()
+    assert len(archived) == 5
+    assert sorted(d.decode()[4:] for d in collector.datagrams) == sorted(r["line"] for r in archived)
+
+
+def test_pipeline_output_schemas(spark, tmp_path):
+    """Archive and quarantine keep their column names and types; a clean
+    batch still leaves one readable schema-only quarantine file."""
+    from dns_log_transformer_spark.streaming.pipeline import batch_writer
+
+    work = str(tmp_path / "work")
+    archive, quarantine = os.path.join(work, "archive"), os.path.join(work, "quarantine")
+    write = batch_writer(work, None, 514, archive=True, deterministic_ids=True)
+    write(_mixed_batch(spark), 0)
+    assert spark.read.parquet(archive).dtypes == ARCHIVE_DTYPES
+    rejects = spark.read.parquet(quarantine)
+    assert rejects.dtypes == QUARANTINE_DTYPES
+    assert [(r["record_idx"], r["reject_reason"]) for r in rejects.collect()] == [
+        (2, "bad_query_timestamp")
+    ]
+
+    clean = spark.createDataFrame([(envelope_json([make_record()], request_id="r1"),)], ["value"])
+    write(clean, 1)
+    assert sorted(os.listdir(quarantine)) == ["part-0-0.parquet", "part-1-0.parquet"]
+    only = spark.read.parquet(os.path.join(quarantine, "part-1-0.parquet"))
+    assert only.dtypes == QUARANTINE_DTYPES
+    assert only.count() == 0
+
+
+def test_pipeline_archive_only_and_syslog_only(spark, tmp_path):
+    """syslog_host=None sends nothing; archive=False writes no files."""
+    from dns_log_transformer_spark.streaming.pipeline import batch_writer
+
+    collector = UdpCollector()
+    try:
+        archive_only = str(tmp_path / "archive_only")
+        batch_writer(archive_only, None, collector.port, archive=True, deterministic_ids=True)(
+            _mixed_batch(spark), 0
+        )
+        assert spark.read.parquet(os.path.join(archive_only, "archive")).count() == 5
+        _wait_for(collector, 1, timeout=1)
+        assert collector.datagrams == []
+
+        syslog_only = str(tmp_path / "syslog_only")
+        batch_writer(syslog_only, "127.0.0.1", collector.port, archive=False, deterministic_ids=True)(
+            _mixed_batch(spark), 0
+        )
+        _wait_for(collector, 5)
+    finally:
+        collector.stop()
+    assert len(collector.datagrams) == 5
+    for name in ("archive", "quarantine"):
+        assert not os.path.exists(os.path.join(syslog_only, name))
+
+
+def test_pipeline_replayed_batch_is_a_noop(spark, tmp_path):
+    """A batch the sink already committed sends no datagram again and
+    rewrites no file. The fence lives in the query's checkpoint dir, so
+    deleting the checkpoint resets it and batch 0 runs again."""
+    import shutil
+
+    from dns_log_transformer_spark.streaming.pipeline import batch_writer
+
+    work = str(tmp_path / "work")
+    archive = os.path.join(work, "archive")
+    collector = UdpCollector()
+    try:
+        write = batch_writer(work, "127.0.0.1", collector.port, archive=True, deterministic_ids=True)
+        raw = _mixed_batch(spark)
+        write(raw, 0)
+        _wait_for(collector, 5)
+        assert len(collector.datagrams) == 5
+        stamps = {n: os.stat(os.path.join(archive, n)).st_mtime_ns for n in os.listdir(archive)}
+
+        write(raw, 0)
+        _wait_for(collector, 6, timeout=1)
+        assert len(collector.datagrams) == 5
+        assert {n: os.stat(os.path.join(archive, n)).st_mtime_ns for n in os.listdir(archive)} == stamps
+
+        shutil.rmtree(os.path.join(work, "checkpoints"))
+        write(raw, 0)
+        _wait_for(collector, 10)
+    finally:
+        collector.stop()
+    assert len(collector.datagrams) == 10
+    assert spark.read.parquet(archive).count() == 5
+
+
+def test_pipeline_start_drops_fence_of_a_checkpoint_without_batches(spark, tmp_path):
+    """A fence left by a direct batch_writer call in a checkpoint dir
+    Spark never ran a batch from does not make the query skip batch 0."""
+    from dns_log_transformer_spark.streaming.pipeline import batch_writer
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    work = str(tmp_path / "work")
+    batch_writer(work, None, 514, archive=True, deterministic_ids=True)(_mixed_batch(spark, "direct"), 0)
+    (landing / "b1.json").write_text(envelope_json([make_record()], request_id="streamed") + "\n")
+    (q,) = start_pipeline(spark, str(landing), work, available_now=True, deterministic_ids=True)
+    assert q.awaitTermination(timeout=120)
+    got = {r["requestId"] for r in spark.read.parquet(os.path.join(work, "archive")).collect()}
+    assert got == {"streamed"}
+
+
 def _write_events(path, name, rows):
     with open(os.path.join(path, name), "w") as f:
         for r in rows:
