@@ -15,23 +15,17 @@ Scale design — the merge must NOT rewrite the whole table per batch:
   (``_kb = md5-bucket(key) % n_buckets`` — the same deterministic
   bucketing the split/sample family uses);
 - each batch computes the distinct buckets its keys touch, reads ONLY
-  those partitions back (partition pruning on ``_kb``), merges them
-  with the batch, and rewrites ONLY those partitions (dynamic partition
-  overwrite). A batch touching k keys costs O(k/n_buckets of the
-  table), not O(table).
+  those buckets back, merges them with the batch, and writes ONLY
+  those buckets' new content. A batch touching k keys costs
+  O(k/n_buckets of the table), not O(table).
 - tombstones are STORED (``keep_tombstones=True``): an incremental
   table that drops a delete forgets it, and a lower-versioned upsert
   replayed later would resurrect the key. ``read_latest`` filters them.
 
-Failure semantics, honestly: foreachBatch replays an epoch after
-failure; the merge is idempotent (latest-wins over base ∪ batch), so a
-replay converges — but parquet-level dynamic overwrite is not atomic
-across partitions (a crash mid-write can leave some buckets new, some
-old until the replay completes). The production answer is a
-transactional table format (Delta/Iceberg/Hudi); this module is the
-engine-level mechanics those formats wrap, kept format-free on purpose.
-The merge itself is ``sinks.merge_touched_buckets``, shared with the
-vector-index sink.
+The table is a manifest store and each batch one commit
+(``streaming.sinks``): a crash leaves readers on the previous batch,
+and the replay merges latest-wins to the same table. The merge itself
+is ``sinks.merge_touched_buckets``, shared with the vector-index sink.
 """
 
 from __future__ import annotations
@@ -41,14 +35,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dns_log_transformer_spark.streaming.sinks import (
-    has_partitions,
+    N_BUCKETS_DEFAULT,
+    Store,
     merge_touched_buckets,
-    overwrite_partitions,
+    read_table,
     require_local_path,
     with_bucket,
 )
-
-N_BUCKETS_DEFAULT = 16
 
 
 def read_latest(
@@ -59,14 +52,10 @@ def read_latest(
 ) -> DataFrame | None:
     """The live view: stored rows minus tombstones (and the internal
     bucket column). None if nothing has been written yet."""
-    require_local_path(table_path)
-    if not has_partitions(table_path, "_kb="):
+    stored = read_table(spark, table_path)
+    if stored is None:
         return None
-    return (
-        spark.read.parquet(table_path)
-        .filter(F.col(op_col) != delete_op)
-        .drop("_kb")
-    )
+    return stored.filter(F.col(op_col) != delete_op).drop("_kb")
 
 
 def upsert_sink(
@@ -87,11 +76,13 @@ def upsert_sink(
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
         if batch_df.isEmpty():
             return
+        store = Store(table_path)
         batch = with_bucket(batch_df, key_col, n_buckets)
         merged, _stored = merge_touched_buckets(
-            batch, table_path, key_col, version_col, op_col, delete_op
+            batch, store, "", key_col, version_col, op_col, delete_op
         )
-        overwrite_partitions(merged, table_path, "_kb")
+        store.replace(merged, "", "_kb")
+        store.commit()
 
     return (
         changes.writeStream.foreachBatch(merge_batch)

@@ -14,8 +14,8 @@ maintained counter table and no retraction machinery:
   bitset and the exact shingle set built ONCE at sink creation — the
   per-batch cost is the capped suspect-verify join, never a benchmark
   rebuild.
-- ``neardup/`` — the full near-dup index, maintained by delegating
-  each batch to ``neardup_index.neardup_merge_batch`` (the attested
+- ``neardup/`` — the full near-dup index, maintained by handing each
+  batch to ``neardup_index.stage_neardup_batch`` (the attested
   crawl-dedup machinery; its ``pairs/`` store is what the report
   reads).
 
@@ -37,9 +37,10 @@ dropped from the report exactly as the batch path drops them
 retroactively (r8 watch-item closed; pairs/ itself stays append-only
 — the reconciliation is read-side, no retraction machinery).
 
-Same honesty caveat as the sibling sinks: parquet appends are not
-transactional across the two stores; a transactional table format is
-the production wrapper. Sizing: ``n_buckets`` as in neardup_index.
+Both stores are ONE manifest store, committed once per batch
+(``streaming.sinks``): a crash leaves the flags and the near-dup index
+on the same previous batch. Sizing: ``n_buckets`` as in
+neardup_index.
 """
 
 from __future__ import annotations
@@ -50,14 +51,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from dns_log_transformer_spark.streaming.cdc_sink import N_BUCKETS_DEFAULT
 from dns_log_transformer_spark.streaming.neardup_index import (
-    neardup_merge_batch,
     read_pairs_reconciled,
+    stage_neardup_batch,
 )
 from dns_log_transformer_spark.streaming.sinks import (
+    N_BUCKETS_DEFAULT,
+    Store,
     drop_seen_ids,
-    has_partitions,
+    read_table,
     require_local_path,
     with_bucket,
 )
@@ -85,11 +87,10 @@ def read_scorecard(
     )
     from dns_log_transformer_spark.operators.dedup import LSH_BUCKET_CAP
 
-    require_local_path(table_path)
-    flags_path = os.path.join(table_path, "flags")
-    if not has_partitions(flags_path, "_kb="):
+    flags = read_table(spark, os.path.join(table_path, "flags"))
+    if flags is None:
         return None
-    flags = spark.read.parquet(flags_path).drop("_kb")
+    flags = flags.drop("_kb")
     wfp = Window.partitionBy("fingerprint")
     flagged = flags.withColumn("is_exdup", F.count("*").over(wfp) >= 2)
     pairs = read_pairs_reconciled(
@@ -135,15 +136,13 @@ def corpus_monitor_sink(
     the shared ``dedup.LSH_BUCKET_CAP``; pass the same value to
     ``read_scorecard``. Returns the StreamingQuery.
 
-    ``compact_max_files`` (optional) turns on SELF-compaction for the
-    two stores that accumulate files per batch — the append-mode flags
-    store (one file set per batch per touched bucket: the r14 drift
-    sweep measured it growing linearly, worst partition 20 files after
-    20 batches) and the embedded near-dup store (the r13 trigger,
-    passed through). Runs at the end of the batch callback, strictly
-    after the flags append, so a compaction crash loses nothing
-    (replay re-appends nothing: the flags store's replay-drop reads
-    ids, not files)."""
+    ``compact_max_files`` (optional) turns on SELF-compaction of the
+    tables that accumulate files per batch — the append-only flags
+    (one file set per batch per touched bucket: the r14 drift sweep
+    measured it growing linearly, worst partition 20 files after 20
+    batches) and the embedded near-dup index's. It runs at the end of
+    the batch callback as a commit of its own, so a crash in it leaves
+    the batch committed."""
     from dns_log_transformer_spark.operators.caching import persist_tracked
     from dns_log_transformer_spark.operators.corpus import decontaminate_against
     from dns_log_transformer_spark.operators.dedup import (
@@ -159,8 +158,6 @@ def corpus_monitor_sink(
     )
 
     require_local_path(table_path)
-    flags_path = os.path.join(table_path, "flags")
-    neardup_path = os.path.join(table_path, "neardup")
     k = BLOOM_K if k is None else k
     m_bits = BLOOM_BITS if m_bits is None else m_bits
 
@@ -179,13 +176,14 @@ def corpus_monitor_sink(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
+        store = Store(table_path)
         from dns_log_transformer_spark.operators.text import with_fingerprint
 
         batch_docs = with_bucket(
             batch_df.dropDuplicates([id_col]).localCheckpoint(), id_col, n_buckets
         )
         # replay-drop against the flags store's touched buckets
-        batch_docs = drop_seen_ids(batch_docs, flags_path, id_col)
+        batch_docs = drop_seen_ids(batch_docs, store, "flags", id_col)
         if batch_docs.isEmpty():
             return
 
@@ -225,27 +223,22 @@ def corpus_monitor_sink(
             )
             .select(id_col, "source", "fingerprint", "is_contaminated", "_kb")
         )
-        # near-dup first: its own store does the same replay-drop, and
-        # a crash between the two writes replays the batch (flags not
-        # yet appended -> not dropped), re-running both idempotently
-        neardup_merge_batch(
+        stage_neardup_batch(
             batch_df,
-            neardup_path,
+            store,
+            "neardup",
             id_col=id_col,
             text_col=text_col,
             threshold=threshold,
             n_buckets=n_buckets,
             bucket_cap=cap,
-            compact_max_files=compact_max_files,
         )
-        flags.write.mode("append").partitionBy("_kb").parquet(flags_path)
+        store.append(flags, "flags", "_kb")
+        store.commit()
         if compact_max_files is not None:
             from dns_log_transformer_spark.streaming.compact import maybe_compact
 
-            # after the append (crash-safe: see docstring); batches
-            # serialize within one foreachBatch query, so the store is
-            # quiesced by construction
-            maybe_compact(spark, flags_path, max_files=compact_max_files)
+            maybe_compact(spark, table_path, max_files=compact_max_files)
 
     return (
         docs.writeStream.foreachBatch(merge_batch)

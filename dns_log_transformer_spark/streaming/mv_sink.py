@@ -7,9 +7,9 @@ epoch replays.
 Why fencing matters: ``foreachBatch`` is at-least-once — after a crash
 the last epoch REPLAYS, and counting aggregates are NOT idempotent. So
 this sink makes the WRITE idempotent instead of the merge: each
-epoch's partial aggregate lands in its own ``_epoch=N`` partition via
-dynamic partition overwrite — a replay of epoch N overwrites
-``_epoch=N`` with identical content, never touching any other epoch.
+epoch's partial aggregate lands in its own ``_epoch=N`` dir — a replay
+of epoch N overwrites ``_epoch=N`` with identical content, never
+touching any other epoch.
 The read side merges partials across epochs (SUM of SUMs, SUM of
 COUNTs — the map-side-combine algebra at the storage layer).
 
@@ -30,11 +30,7 @@ Scale design:
   after: the new view, with leftover folded partials invisible until
   swept), and running compaction WHILE the sink is live is safe: a new
   epoch landing mid-compaction is above the pinned fence, is never
-  folded, never deleted, and stays visible as a partial. Residual
-  caveat (the one a transactional table format closes): a replay
-  rewriting a partial's files concurrently with a reader scanning that
-  same partition can tear, because parquet directory swaps are not
-  atomic — same caveat as cdc_sink.
+  folded, never deleted, and stays visible as a partial.
 
 Aggregates kept: per-key row count and exact integer sum (cents
 discipline) — extend by adding more algebraic aggregates (min/max/
@@ -52,8 +48,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from dns_log_transformer_spark.streaming.sinks import (
     fold_epoch,
-    has_partitions,
-    overwrite_partitions,
     read_base,
     read_fence,
     require_local_path,
@@ -76,27 +70,23 @@ def merge_epoch(
     value_col: str,
 ) -> None:
     """Land one epoch's partial aggregate idempotently: the partial for
-    ``_epoch=N`` is a pure function of the batch, and dynamic partition
-    overwrite replaces exactly that partition — replaying the epoch
-    rewrites identical content — and epochs at or below the compaction
-    fence are dropped (their rows already live in the folded base).
-    Public so tests (and backfills) can drive epochs directly."""
+    ``_epoch=N`` is a pure function of the batch, written over exactly
+    that dir — replaying the epoch rewrites identical content — and
+    epochs at or below the compaction fence are dropped (their rows
+    already live in the folded base). Public so tests (and backfills)
+    can drive epochs directly."""
     require_local_path(table_path)
     if int(epoch_id) <= read_fence(table_path)[0]:
         return  # already folded into the base; a replay must no-op
     if batch_df.isEmpty():
         return
-    partial = (
-        batch_df.groupBy(F.col(key_col).alias("key"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(F.col(value_col).cast("decimal(38,0)"))
-            .cast("long")
-            .alias("sum_val"),
-        )
-        .withColumn("_epoch", F.lit(int(epoch_id)))
+    partial = batch_df.groupBy(F.col(key_col).alias("key")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.sum(F.col(value_col).cast("decimal(38,0)")).cast("long").alias("sum_val"),
     )
-    overwrite_partitions(partial, table_path, "_epoch")
+    partial.write.mode("overwrite").parquet(
+        os.path.join(table_path, f"_epoch={int(epoch_id)}")
+    )
 
 
 def _epochs(table_path: str) -> list[int]:
@@ -114,7 +104,7 @@ def _partials(
     spark: SparkSession, table_path: str, keep: Column
 ) -> DataFrame | None:
     """The epoch partials ``keep`` selects, as (key, n_rows, sum_val)."""
-    if not has_partitions(table_path, "_epoch="):
+    if not _epochs(table_path):
         return None
     return (
         spark.read.parquet(table_path)

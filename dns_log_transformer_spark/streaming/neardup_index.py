@@ -47,9 +47,9 @@ time by re-checking every pair against final bucket occupancy — the
 read side of the store closes the divergence without retraction
 machinery (pinned on a planted cap-crossing corpus in test_streaming).
 
-Same honesty caveat as cdc_sink: parquet appends are not transactional
-across the three tables; a transactional format is the production
-wrapper. Sizing: ``n_buckets`` bounds the partition fan-out — size it
+The three tables are one manifest store, committed once per batch
+(``streaming.sinks``), so a crash never leaves a batch half-appended.
+Sizing: ``n_buckets`` bounds the partition fan-out — size it
 so a typical batch touches a small fraction (thousands at 100 TB;
 the default 16 is fixture-scaled). The residual drift from parquet
 file accumulation inside touched partitions is reset offline by
@@ -67,10 +67,11 @@ from pyspark.sql.streaming import StreamingQuery
 
 from dns_log_transformer_spark.operators import dedup
 from dns_log_transformer_spark.operators.corpus import hash_bucket
-from dns_log_transformer_spark.streaming.cdc_sink import N_BUCKETS_DEFAULT
 from dns_log_transformer_spark.streaming.sinks import (
+    N_BUCKETS_DEFAULT,
+    Store,
     drop_seen_ids,
-    has_partitions,
+    read_table,
     require_local_path,
     touched_buckets,
     with_bucket,
@@ -80,11 +81,7 @@ from dns_log_transformer_spark.streaming.sinks import (
 def read_pairs(spark: SparkSession, table_path: str) -> DataFrame | None:
     """All near-dup pairs emitted so far: (doc_a, doc_b, jaccard).
     None if nothing has been written yet."""
-    require_local_path(table_path)
-    pairs = os.path.join(table_path, "pairs")
-    if not os.path.isdir(pairs):
-        return None
-    return spark.read.parquet(pairs)
+    return read_table(spark, os.path.join(table_path, "pairs"))
 
 
 def read_pairs_reconciled(
@@ -112,24 +109,13 @@ def read_pairs_reconciled(
     pairs = read_pairs(spark, table_path)
     if pairs is None:
         return None
-    buckets_path = os.path.join(table_path, "buckets")
-    if not has_partitions(buckets_path, "_bb="):
+    buckets = read_table(spark, os.path.join(table_path, "buckets"))
+    if buckets is None:
         return pairs
-    # dropDuplicates before counting: buckets/ is append-only and a
-    # crash between the buckets and shingles writes replays the batch,
-    # appending its bucket rows a second time — duplicated rows would
-    # permanently double that batch's occupancy counts and silently
-    # mark (cap/2, cap] buckets heavy. (doc, band, key) is unique in a
-    # consistent store, so the dedup is the idempotent read.
     # persisted: both probe sides (ka, kb) and the heavy-key aggregate
     # consume this frame (PLANS.md rule 4).
     kept = persist_tracked(
-        dedup.drop_heavy_buckets(
-            spark.read.parquet(buckets_path)
-            .drop("_bb")
-            .dropDuplicates([id_col, "band", "key"]),
-            bucket_cap,
-        )
+        dedup.drop_heavy_buckets(buckets.drop("_bb"), bucket_cap)
     )
     ka = kept.select(F.col(id_col).alias("doc_a"), "band", "key")
     kb = kept.select(F.col(id_col).alias("doc_b"), "band", "key")
@@ -207,17 +193,48 @@ def neardup_merge_batch(
     bucket_cap: int = dedup.LSH_BUCKET_CAP,
     compact_max_files: int | None = None,
 ) -> None:
-    """One micro-batch of the near-dup index, public so the streaming
-    corpus monitor (streaming/corpus_monitor.py) and backfills can
+    """One micro-batch of the near-dup index, public so backfills can
     drive batches directly — the mv_sink.merge_epoch convention.
     ``compact_max_files``: see :func:`neardup_index_sink`."""
     require_local_path(table_path)
-    buckets_path = os.path.join(table_path, "buckets")
-    shingles_path = os.path.join(table_path, "shingles")
-    pairs_path = os.path.join(table_path, "pairs")
     if batch_df.isEmpty():
         return
+    store = Store(table_path)
+    stage_neardup_batch(
+        batch_df, store, "", id_col, text_col, n, threshold,
+        num_hashes, num_bands, n_buckets, bucket_cap,
+    )
+    store.commit()
+    # optional self-compaction (VERDICT r12 #4), a commit of its own
+    # after the batch's; threshold crossings are rare by construction
+    # (~every max_files batches per touched bucket), so the steady-state
+    # per-batch cost is one manifest read.
+    if compact_max_files is not None:
+        from dns_log_transformer_spark.streaming.compact import maybe_compact
+
+        maybe_compact(batch_df.sparkSession, table_path, max_files=compact_max_files)
+
+
+def stage_neardup_batch(
+    batch_df: DataFrame,
+    store: Store,
+    prefix: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.5,
+    num_hashes: int = dedup.NUM_HASHES,
+    num_bands: int = dedup.NUM_BANDS,
+    n_buckets: int = N_BUCKETS_DEFAULT,
+    bucket_cap: int = dedup.LSH_BUCKET_CAP,
+) -> None:
+    """Write one batch into ``store``'s near-dup tables under ``prefix``
+    ("" for a store of its own; the corpus monitor's is ``neardup``),
+    uncommitted, so the caller commits them with its own tables."""
     spark = batch_df.sparkSession
+    buckets_t, shingles_t, pairs_t = (
+        os.path.join(prefix, t) for t in ("buckets", "shingles", "pairs")
+    )
 
     # 1. shingle the batch (docs with no shingles can never pair);
     #    within-batch id replays collapse to one row
@@ -230,7 +247,7 @@ def neardup_merge_batch(
     ).localCheckpoint()
 
     # 2. drop ids already indexed (cross-batch replay)
-    sh_b = drop_seen_ids(sh_b, shingles_path, id_col)
+    sh_b = drop_seen_ids(sh_b, store, shingles_t, id_col)
     if sh_b.isEmpty():
         return
 
@@ -247,30 +264,10 @@ def neardup_merge_batch(
         .localCheckpoint()
     )
 
-    # 4. candidates: batch band keys vs (touched index partitions +
+    # 4. candidates: batch band keys vs (touched index buckets +
     #    the batch itself); each unordered pair once, batch-side driven
-    all_bk = bk_b
-    if has_partitions(buckets_path, "_bb="):
-        old_bk = spark.read.parquet(buckets_path).filter(
-            F.col("_bb").isin(touched_buckets(bk_b, "_bb"))
-        )
-        # dropDuplicates on the UNION, not just the store read: a crash
-        # between the buckets and shingles appends replays the batch
-        # (the replay-drop keys on the SHINGLES store), so the store
-        # already holds the replayed batch's bucket rows (prior-crash
-        # append) AND bk_b carries them again in-flight — undeduped,
-        # the occupancy count below would double every batch-touched
-        # bucket during the replay, and (once re-appended) forever for
-        # later batches. (doc, band, key) is unique in a consistent
-        # history, so the dedup is the idempotent read; touched
-        # partitions only, batch-bounded. Pairs are safe either way:
-        # the write order below lands pairs/ FIRST, so a replayed
-        # batch's pairs already exist — replays make pairs
-        # at-least-once, deduplicated by every read path
-        # (read_pairs_reconciled .distinct(), the set-based pins).
-        all_bk = bk_b.unionByName(old_bk).dropDuplicates(
-            [id_col, "band", "key"]
-        )
+    old_bk = store.read(spark, buckets_t, touched_buckets(bk_b, "_bb"))
+    all_bk = bk_b if old_bk is None else bk_b.unionByName(old_bk)
     # per-batch hot-bucket bound (ADVICE r7): a bucket whose ACCUMULATED
     # occupancy (index + this batch) exceeds bucket_cap contributes no
     # candidates this batch — bounding the fan-out of the equi-join at
@@ -309,14 +306,12 @@ def neardup_merge_batch(
         n_buckets,
     )
     all_sh = sh_b.select(id_col, "shingles")
-    if has_partitions(shingles_path, "_kb="):
-        old_sh = (
-            spark.read.parquet(shingles_path)
-            .filter(F.col("_kb").isin(touched_buckets(partners)))
-            .join(F.broadcast(partners.select(id_col)), id_col, "left_semi")
+    old_sh = store.read(spark, shingles_t, touched_buckets(partners))
+    if old_sh is not None:
+        all_sh = all_sh.unionByName(
+            old_sh.join(F.broadcast(partners.select(id_col)), id_col, "left_semi")
             .select(id_col, "shingles")
         )
-        all_sh = all_sh.unionByName(old_sh)
     verify = cand.join(
         all_sh.select(
             F.col(id_col).alias("doc_a"), F.col("shingles").alias("sh_a")
@@ -339,21 +334,6 @@ def neardup_merge_batch(
 
     # 6. emit + fold the batch into the index (append-only: docs are
     #    immutable and replays were dropped in step 2)
-    out.write.mode("append").parquet(pairs_path)
-    bk_b.write.mode("append").partitionBy("_bb").parquet(buckets_path)
-    sh_b.select(id_col, "shingles", "_kb").write.mode("append").partitionBy(
-        "_kb"
-    ).parquet(shingles_path)
-
-    # 7. optional self-compaction (VERDICT r12 #4): AFTER every store
-    #    write of this batch has landed, so a compaction crash can never
-    #    lose batch data — the swap's own crash window leaves a complete
-    #    `.old` (compact.py) and the NEXT batch's compaction refuses
-    #    loudly rather than guessing. Threshold crossings are rare by
-    #    construction (~every max_files batches per touched partition),
-    #    so the steady-state per-batch cost is one listdir.
-    if compact_max_files is not None:
-        from dns_log_transformer_spark.streaming.compact import maybe_compact
-
-        maybe_compact(spark, table_path, max_files=compact_max_files)
-
+    store.append(out, pairs_t)
+    store.append(bk_b, buckets_t, "_bb")
+    store.append(sh_b.select(id_col, "shingles", "_kb"), shingles_t, "_kb")

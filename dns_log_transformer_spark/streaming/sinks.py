@@ -1,10 +1,64 @@
-"""Per-micro-batch writers for the DNS pipeline's outputs.
+"""The one commit protocol of every streaming store, and the DNS
+pipeline's per-micro-batch writers.
 
-``streaming.pipeline`` runs one ``foreachBatch`` query; each micro-batch
-hands ``emit_dns_batch`` one row set (a row per BIND9 line of a valid
-record, a row per invalid record) and it runs as ONE Spark job: a
-``mapInArrow`` pass over each partition does all of the batch's sink
-work, then the driver commits.
+**Manifest.** A store is a directory whose ``_FENCE`` json is the last
+commit::
+
+    {"epoch": N, "tables": {table: {bucket: [data dir, ...]}}}
+
+``table`` is a path under the root ("" for the root itself), ``bucket``
+a hive-style ``<col>=<value>`` dir of it ("" for an unbucketed table)
+and each data dir a ``v<N>`` (a fold table: ``_base_e<N>``) dir inside
+``<root>/<table>/<bucket>``. A table is exactly the files in the dirs its
+entry names. Readers (``read_table``, ``Store.read``) read those dirs
+and nothing else: a plain parquet read of a store dir would also see
+dead and uncommitted ones. The bucket column comes back from the
+``<col>=<value>`` path, and a read of chosen buckets lists only theirs.
+
+**Commit.** A batch (``Store``) reads the last commit and writes into
+dirs named by the next epoch, which no manifest names yet:
+
+- a keyed bucket (the CDC table, the vector directory and cells, the
+  winnow spans and fpagg) gets its whole new content in one new dir,
+  which replaces the bucket's list (``Store.replace``); a bucket left
+  with no row drops out of the manifest;
+- an append table (near-dup buckets, shingles and pairs, winnow anchors,
+  monitor flags) gets the batch's rows in one new dir per bucket, added
+  to the bucket's list (``Store.append``).
+
+One ``os.replace`` of the manifest (``_commit_fence``) then commits
+every table of the store at once, and a sweep removes the data dirs the
+manifest no longer names. A crash before the replace leaves readers on
+the old state and the new dirs unread; the batch's replay starts from
+that state and rewrites them. A crash after it leaves dead dirs that the
+next sweep removes. A reader that listed a dir before a commit whose
+sweep removes it fails on the missing file instead of mixing two
+states; its next read sees the new commit. Compaction
+(``streaming.compact``) is a commit of the same kind. A store has one
+writer at a time: its sink's batch callback, which Spark runs one batch
+after another.
+
+**Replay.** A replayed batch converges without an epoch id: a keyed
+table merges latest-wins, so merging the same changes again gives the
+same content, and an append table drops the ids it already holds
+(``drop_seen_ids``), the same rule that drops a record the source
+redelivers.
+
+**Epoch fences** are the one-table case of the format. ``fold_epoch``
+is the one way an aggregate table (the CMS grid, the per-source HLL
+sketches, the Bloom words, the materialized view's base) changes: epoch
+N merges its rows into the base the manifest names, writes a fresh
+``_base_e<N>`` and commits with the manifest's epoch set to N. Counts
+are not idempotent, so the epoch is the fence: an epoch at or below it
+is a no-op and a replayed micro-batch is counted once. ``emit_dns_batch``
+keeps the highest committed batch id the same way, in a manifest that
+names no table.
+
+**DNS pipeline.** ``streaming.pipeline`` runs one ``foreachBatch``
+query; each micro-batch hands ``emit_dns_batch`` one row set (a row per
+BIND9 line of a valid record, a row per invalid record) and it runs as
+ONE Spark job: a ``mapInArrow`` pass over each partition does all of the
+batch's sink work, then the driver commits.
 
 - syslog: one UDP datagram per line, as the reference does for a
   hard-coded collector (app/app.py:17-32,253), from ONE socket per
@@ -20,31 +74,10 @@ work, then the driver commits.
   files with the staged ones, so a replayed batch replaces its own
   files instead of adding copies, and the outputs stay readable as
   ``<dir>/*.parquet`` without the file sink's ``_spark_metadata`` log.
-- ``emit_dns_batch`` records the highest committed batch id in a
-  ``_FENCE`` json in the query's checkpoint dir after the renames; a
-  batch the fence covers is a no-op, so replaying a committed batch
-  sends and writes nothing. A crash between the first send and the
-  fence replays the batch: syslog is at-least-once for that window,
-  and at-most-once past the network.
-
-The other ``foreachBatch`` sinks share the helpers below:
-
-- ``fold_epoch`` is the one way an aggregate table (the CMS grid, the
-  per-source HLL sketches, the Bloom words, the materialized view's
-  base) changes. The table's rows live in an underscore-prefixed
-  ``_base_e<N>`` dir, which Spark's parquet reader skips, and the
-  ``_FENCE`` json names that dir and the highest epoch folded into it.
-  Epoch N merges its rows into the base the fence names, writes a fresh
-  ``_base_e<N>`` and commits with one ``os.replace`` of the fence. An
-  epoch the fence already covers is a no-op, so a replayed micro-batch
-  is counted once. A crash before the replace leaves readers on the old
-  base; the replay rewrites the same ``_base_e<N>`` and commits. The
-  fold never writes the dir it reads, so it needs no
-  ``localCheckpoint``.
-- ``merge_touched_buckets`` is the latest-wins merge of a batch into
-  the ``_kb`` hash buckets it touches (the CDC and vector-index sinks),
-  and ``drop_seen_ids`` the replay-drop of ids an append-only store
-  already holds (the near-dup, winnow and corpus-monitor sinks).
+- the fence in the query's checkpoint dir is committed after the
+  renames; a batch it covers sends and writes nothing. A crash between
+  the first send and the commit replays the batch: syslog is
+  at-least-once for that window, and at-most-once past the network.
 """
 
 from __future__ import annotations
@@ -52,6 +85,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
 import shutil
 import socket
 from typing import Iterator
@@ -61,6 +95,11 @@ from pyspark.sql import functions as F
 
 from dns_log_transformer_spark.operators import cdc
 from dns_log_transformer_spark.operators.corpus import hash_bucket
+
+#: Hash buckets per keyed or append table, fixture-scaled: size it so a
+#: typical batch touches a small fraction of them.
+N_BUCKETS_DEFAULT = 16
+
 
 #: RFC3164 facility*8 + severity: daemon(3)*8 + info(6) = 30 — the
 #: priority SysLogHandler(facility=LOG_DAEMON).info() sends
@@ -199,7 +238,7 @@ def emit_dns_batch(
             pq.write_table(empty, os.path.join(stages[out], "part-00000.parquet"))
         _commit_stage(path, stages[out], batch_id)
     os.makedirs(fence_dir, exist_ok=True)
-    _commit_fence(fence_dir, batch_id, None)
+    _commit_fence(fence_dir, batch_id, {})
     return counts["skipped"]
 
 
@@ -237,13 +276,158 @@ def require_local_path(table_path: str) -> None:
         )
 
 
-def has_partitions(path: str, prefix: str) -> bool:
-    """Does this local parquet table directory have <prefix>= partition
-    subdirectories? The shared discovery probe for every sink that
-    maintains a partitioned table (cdc/vector/near-dup/mv)."""
-    return os.path.isdir(path) and any(
-        e.startswith(prefix) for e in os.listdir(path)
-    )
+#: The store's manifest (module docstring).
+FENCE = "_FENCE"
+
+#: The dirs a commit names, and the stage a bucketed write lands in
+#: before its buckets move into place; the sweep removes the unnamed ones.
+_DATA_DIR = re.compile(r"v\d+|_base_e\d+|_stage")
+
+
+def read_manifest(root: str) -> dict:
+    """The last commit of the store at ``root``: epoch -1 and no tables
+    before the first."""
+    try:
+        with open(os.path.join(root, FENCE)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return {"epoch": -1, "tables": {}}
+
+
+def _commit_fence(root: str, epoch: int, tables: dict) -> None:
+    """THE commit of every store: one replace of its manifest."""
+    tmp = os.path.join(root, FENCE + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump({"epoch": epoch, "tables": tables}, f)
+    os.replace(tmp, os.path.join(root, FENCE))
+
+
+def _sweep(root: str, tables: dict) -> None:
+    """Remove the data dirs of ``root``'s tables that ``tables`` does not
+    name, and the bucket dirs that leaves empty."""
+    for table, buckets in tables.items():
+        path = os.path.join(root, table)
+        for bucket in [""] + [e for e in _listdir(path) if "=" in e]:
+            bucket_dir = os.path.join(path, bucket)
+            for entry in _listdir(bucket_dir):
+                if _DATA_DIR.fullmatch(entry) and entry not in buckets.get(bucket, []):
+                    shutil.rmtree(os.path.join(bucket_dir, entry), ignore_errors=True)
+            if bucket and not os.listdir(bucket_dir):
+                os.rmdir(bucket_dir)
+
+
+def _listdir(path: str) -> list[str]:
+    return os.listdir(path) if os.path.isdir(path) else []
+
+
+def _read(
+    spark: SparkSession,
+    root: str,
+    tables: dict,
+    table: str,
+    buckets: list | None,
+) -> DataFrame | None:
+    """``table``'s rows in the dirs ``tables`` names, only ``buckets``'
+    (bucket values) when given; None when that is no dir."""
+    wanted = None if buckets is None else {str(b) for b in buckets}
+    paths = [
+        os.path.join(root, table, key, d)
+        for key, dirs in sorted(tables.get(table, {}).items())
+        if wanted is None or key.split("=", 1)[-1] in wanted
+        for d in dirs
+    ]
+    if not paths:
+        return None
+    return spark.read.option("basePath", os.path.join(root, table)).parquet(*paths)
+
+
+def locate(path: str) -> tuple[str, str]:
+    """(store root, table) of ``path``: the nearest dir at or above it
+    holding a manifest, and ``path`` relative to it ("" for the root).
+    A table of an embedded store, such as the corpus monitor's
+    ``neardup/``, so resolves to the enclosing store's manifest. With
+    no manifest anywhere above, ``path`` itself with no table."""
+    root, table = os.path.abspath(path), ""
+    while not os.path.exists(os.path.join(root, FENCE)):
+        parent = os.path.dirname(root)
+        if parent == root:
+            return path, ""
+        root, table = parent, os.path.join(os.path.basename(root), table)
+    return root, table.rstrip("/")
+
+
+def read_table(
+    spark: SparkSession, path: str, buckets: list | None = None
+) -> DataFrame | None:
+    """The committed rows of the table at ``path`` (``locate``), only
+    ``buckets``' when given. None before the first commit holding
+    any."""
+    require_local_path(path)
+    root, table = locate(path)
+    return _read(spark, root, read_manifest(root)["tables"], table, buckets)
+
+
+class Store:
+    """One batch's writes to the store at ``root`` (module docstring):
+    ``read`` sees the last commit, ``append`` and ``replace`` write into
+    ``v<epoch>`` dirs, and ``commit`` makes them live at once."""
+
+    def __init__(self, root: str):
+        require_local_path(root)
+        self.root = root
+        manifest = read_manifest(root)
+        self.epoch = manifest["epoch"] + 1
+        self.committed = manifest["tables"]
+        self.tables = json.loads(json.dumps(self.committed))
+
+    def read(
+        self, spark: SparkSession, table: str, buckets: list | None = None
+    ) -> DataFrame | None:
+        """``table`` as last committed, only ``buckets``' when given."""
+        return _read(spark, self.root, self.committed, table, buckets)
+
+    def _write(self, df: DataFrame, table: str, col: str | None) -> list[str]:
+        """Write ``df`` into this epoch's dir of each ``col`` bucket it
+        holds (of the table itself when ``col`` is None); the written
+        bucket keys. A dir left by a crashed attempt is replaced."""
+        name = f"v{self.epoch}"
+        path = os.path.join(self.root, table)
+        if col is None:
+            df.write.mode("overwrite").parquet(os.path.join(path, name))
+            return [""]
+        stage = os.path.join(path, "_stage")
+        df.write.mode("overwrite").partitionBy(col).parquet(stage)
+        keys = sorted(e for e in os.listdir(stage) if e.startswith(f"{col}="))
+        for key in keys:
+            target = os.path.join(path, key, name)
+            shutil.rmtree(target, ignore_errors=True)
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.rename(os.path.join(stage, key), target)
+        shutil.rmtree(stage)
+        return keys
+
+    def append(self, df: DataFrame, table: str, col: str | None = None) -> None:
+        """Add ``df``'s rows to ``table``: a new dir per bucket."""
+        entries = self.tables.setdefault(table, {})
+        for key in self._write(df, table, col):
+            entries.setdefault(key, []).append(f"v{self.epoch}")
+
+    def replace(
+        self, df: DataFrame, table: str, col: str | None = None, buckets: list = ()
+    ) -> None:
+        """``df`` is the whole new content of the buckets it holds and of
+        ``buckets`` (bucket values): each gets its new dir alone, or
+        drops out of the manifest when ``df`` holds no row of it."""
+        entries = self.tables.setdefault(table, {})
+        for b in buckets:
+            entries.pop(f"{col}={b}", None)
+        for key in self._write(df, table, col):
+            entries[key] = [f"v{self.epoch}"]
+
+    def commit(self) -> None:
+        os.makedirs(self.root, exist_ok=True)
+        _commit_fence(self.root, self.epoch, self.tables)
+        _sweep(self.root, self.tables)
 
 
 def with_bucket(df: DataFrame, key_col: str, n_buckets: int) -> DataFrame:
@@ -261,31 +445,25 @@ def touched_buckets(df: DataFrame, col: str = "_kb") -> list[int]:
 
 def merge_touched_buckets(
     batch: DataFrame,
-    table_path: str,
+    store: Store,
+    table: str,
     key_col: str,
     version_col: str,
     op_col: str,
     delete_op: str,
 ) -> tuple[DataFrame, DataFrame | None]:
     """Latest-wins merge of a ``_kb``-carrying batch into the buckets
-    of the table at ``table_path`` it touches. Returns ``(merged,
-    stored)``: ``merged`` is the touched buckets' new content,
-    materialized because the caller overwrites the partitions its plan
-    reads; ``stored`` is the touched buckets' old rows as a lazy read
-    (None before the first write), for a caller that needs the batch
-    keys' previous state. Read ``stored`` before overwriting.
+    of ``store``'s ``table`` it touches. Returns ``(merged, stored)``:
+    ``merged`` is the touched buckets' new content; ``stored`` is their
+    committed rows (None before the first commit), for a caller that
+    needs the batch keys' previous state.
 
     Tombstones are kept: an incremental table that drops a delete
     forgets it, and a lower-versioned upsert replayed later would
     resurrect the key. The op string breaks (key, version) ties ('U'
     beats 'D'), so an epoch replay holding a same-version upsert and
     delete converges to the same table either way."""
-    stored = None
-    if has_partitions(table_path, "_kb="):
-        # partition pruning: only the touched buckets are read back
-        stored = batch.sparkSession.read.parquet(table_path).filter(
-            F.col("_kb").isin(touched_buckets(batch))
-        )
+    stored = store.read(batch.sparkSession, table, touched_buckets(batch))
     merged = cdc.upsert_latest(
         batch if stored is None else stored.unionByName(batch),
         [key_col, "_kb"],
@@ -294,53 +472,34 @@ def merge_touched_buckets(
         delete_op,
         keep_tombstones=True,
         tiebreak_cols=[op_col],
-    ).localCheckpoint()
+    )
     return merged, stored
 
 
-def overwrite_partitions(df: DataFrame, table_path: str, col: str) -> None:
-    """Replace exactly the ``col`` partitions ``df`` holds. Dynamic
-    overwrite is scoped to this write: a session-wide conf flip would
-    turn every later partitioned overwrite on the shared session into a
-    partition-matching one."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(col)
-        .parquet(table_path)
-    )
-
-
-def drop_seen_ids(batch: DataFrame, store_path: str, id_col: str) -> DataFrame:
-    """The replay-drop of an append-only store: ``batch`` (carrying
-    ``_kb``) minus the ids the store already holds, read from ONLY the
-    ``_kb`` buckets the batch touches. Materialized, so the callers'
-    later writes to the store cannot change it."""
-    if not has_partitions(store_path, "_kb="):
+def drop_seen_ids(
+    batch: DataFrame, store: Store, table: str, id_col: str
+) -> DataFrame:
+    """``batch`` (carrying ``_kb``) minus the ids ``store``'s append
+    table ``table`` already holds, read from ONLY the ``_kb`` buckets the
+    batch touches: the rule that drops a redelivered record, and what
+    makes a replayed batch converge."""
+    seen = store.read(batch.sparkSession, table, touched_buckets(batch))
+    if seen is None:
         return batch
-    seen = (
-        batch.sparkSession.read.parquet(store_path)
-        .filter(F.col("_kb").isin(touched_buckets(batch)))
-        .select(id_col)
-        .distinct()
-    )
-    return batch.join(F.broadcast(seen), id_col, "left_anti").localCheckpoint()
-
-
-#: The fenced table's commit record: {"folded_thru": N, "base": dir}
-#: (base null for the DNS pipeline's fence, which names no table).
-FENCE = "_FENCE"
+    # checkpointed: every caller reads the result several times (the
+    # emptiness check, the frames derived from it, its own append)
+    return batch.join(
+        F.broadcast(seen.select(id_col).distinct()), id_col, "left_anti"
+    ).localCheckpoint()
 
 
 def read_fence(table_path: str) -> tuple[int, str | None]:
-    """(highest epoch folded, base dir the fence names); (-1, None)
-    before the first fold."""
-    try:
-        with open(os.path.join(table_path, FENCE)) as f:
-            info = json.load(f)
-    except FileNotFoundError:
-        return -1, None
-    return int(info["folded_thru"]), info["base"]
+    """(epoch, base dir) of a one-table store (a fold table, or the DNS
+    pipeline's fence, which names no table); (-1, None) before the
+    first commit."""
+    manifest = read_manifest(table_path)
+    base = manifest["tables"].get("", {}).get("", [None])[0]
+    return manifest["epoch"], base
 
 
 def read_base(
@@ -356,13 +515,6 @@ def read_base(
     return fence, spark.read.parquet(os.path.join(table_path, base))
 
 
-def _commit_fence(table_path: str, epoch: int, base: str | None) -> None:
-    tmp = os.path.join(table_path, FENCE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"folded_thru": epoch, "base": base}, f)
-    os.replace(tmp, os.path.join(table_path, FENCE))
-
-
 def fold_epoch(
     rows: DataFrame,
     epoch: int,
@@ -373,10 +525,9 @@ def fold_epoch(
     """Fold epoch ``epoch``'s ``rows`` into the fenced table at
     ``table_path``: group the rows plus the current base by ``keys``
     with the table's ``merge`` aggregates, write ``_base_e<epoch>``,
-    commit by replacing the fence, then remove the old base. A no-op
-    when the fence already covers ``epoch``, so a replay counts once;
-    a crash at any step leaves readers on the old or the new base,
-    never a partial one (module docstring)."""
+    commit, then sweep the old base. A no-op when the fence already
+    covers ``epoch``, so a replay counts once. The fold never writes the
+    dir it reads, so it needs no ``localCheckpoint``."""
     require_local_path(table_path)
     fence, base = read_fence(table_path)
     if epoch <= fence:
@@ -389,7 +540,6 @@ def fold_epoch(
     rows.groupBy(*keys).agg(*merge).write.mode("overwrite").parquet(
         os.path.join(table_path, new_base)
     )
-    _commit_fence(table_path, epoch, new_base)
-    for entry in os.listdir(table_path):
-        if entry.startswith("_base_") and entry != new_base:
-            shutil.rmtree(os.path.join(table_path, entry), ignore_errors=True)
+    tables = {"": {"": [new_base]}}
+    _commit_fence(table_path, epoch, tables)
+    _sweep(table_path, tables)

@@ -15,15 +15,15 @@ Two materializations under ``table_path``:
   IVF query scans (probed cells only). A materialized view of the
   directory's live rows.
 
-Per micro-batch, both rewrites touch only the partitions the batch's
-keys live in (dynamic partition overwrite): directory buckets by key
-hash, cell partitions = old cells of changed keys ∪ newly assigned
-cells. A batch of k changes costs O(k/n of each table), never O(index).
+Per micro-batch, both rewrites touch only the buckets the batch's keys
+live in: directory buckets by key hash, cells = old cells of changed
+keys ∪ newly assigned cells. A batch of k changes costs O(k/n of each
+table), never O(index). Both tables are one manifest store, committed
+once per batch (``streaming.sinks``): a crash leaves readers on the
+previous batch's directory AND cells, and the replay's latest-wins merge
+with its total (version, op) order converges. A cell left with no
+vector drops out of the manifest.
 
-Same honesty caveats as cdc_sink (which this module composes): parquet
-dynamic overwrite is not atomic across partitions — epoch replays
-converge because the merge is latest-wins with a total (version, op)
-ordering; a transactional table format is the production wrapper.
 Codebook retraining is an offline batch concern by design (the
 FAISS/Milvus split): this sink maintains assignments against the
 codebook it was started with.
@@ -43,11 +43,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dns_log_transformer_spark.operators import similarity
-from dns_log_transformer_spark.streaming.cdc_sink import N_BUCKETS_DEFAULT
 from dns_log_transformer_spark.streaming.sinks import (
-    has_partitions,
+    N_BUCKETS_DEFAULT,
+    Store,
     merge_touched_buckets,
-    overwrite_partitions,
+    read_table,
     require_local_path,
     with_bucket,
 )
@@ -59,11 +59,7 @@ def read_index(
     """The live index: (vec_id, version, embedding, cell), cell-
     partitioned so an IVF query's probed-cell read prunes to its
     partitions. None if nothing has been written yet."""
-    require_local_path(table_path)
-    cells = os.path.join(table_path, "cells")
-    if not has_partitions(cells, "cell="):
-        return None
-    return spark.read.parquet(cells)
+    return read_table(spark, os.path.join(table_path, "cells"))
 
 
 def ivf_index_sink(
@@ -83,13 +79,12 @@ def ivf_index_sink(
     each micro-batch folds into the directory + cell table at
     ``table_path``. Returns the StreamingQuery."""
     require_local_path(table_path)
-    dir_path = os.path.join(table_path, "directory")
-    cells_path = os.path.join(table_path, "cells")
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
+        store = Store(table_path)
         # 1. assign cells: upserts from their (new) embedding via the
         #    broadcast codebook; deletes carry no placement (cell null)
         #    and MUST NOT reach the assignment UDF — a delete row is not
@@ -107,10 +102,13 @@ def ivf_index_sink(
 
         # 2. directory merge (cdc_sink shape: touched buckets only)
         merged, old_dir = merge_touched_buckets(
-            batch, dir_path, id_col, version_col, op_col, delete_op
+            batch, store, "directory", id_col, version_col, op_col, delete_op
         )
+        # checkpointed: read by the touched-cell collect, the cells
+        # rewrite and the directory write
+        merged = merged.localCheckpoint()
 
-        # 3. the cell partitions to rewrite: wherever a batch key lived
+        # 3. the cells to rewrite: wherever a batch key lived
         #    before (its directory cell) plus wherever it lands now —
         #    driver state is bounded by the batch's distinct cells
         winners = merged.join(F.broadcast(keys), id_col, "left_semi")
@@ -124,38 +122,17 @@ def ivf_index_sink(
             new_cells = new_cells.unionByName(old_cells)
         touched_cells = [r["cell"] for r in new_cells.distinct().collect()]
 
-        # 4. rewrite touched cell partitions: previous residents minus
-        #    the batch's keys, plus the batch keys' live winners
+        # 4. rewrite touched cells: previous residents minus the
+        #    batch's keys, plus the batch keys' live winners
         live = winners.filter(F.col(op_col) != delete_op).select(
             id_col, version_col, vec_col, "cell"
         )
-        if touched_cells and has_partitions(cells_path, "cell="):
-            keep = (
-                spark.read.parquet(cells_path)
-                .filter(F.col("cell").isin(touched_cells))
-                .join(F.broadcast(keys), id_col, "left_anti")
-            )
-            live = keep.unionByName(live)
-        live = live.localCheckpoint()
-        overwrite_partitions(merged, dir_path, "_kb")
-        overwrite_partitions(live, cells_path, "cell")
-        # 5. a touched cell that ended EMPTY never appears in `live`,
-        #    and dynamic overwrite only replaces partitions present in
-        #    the written data — the old files would survive and deleted
-        #    or moved vectors would stay visible. Remove those partition
-        #    directories explicitly (local-path contract; bounded by the
-        #    batch's touched-cell count).
-        import shutil
-
-        still_live = {
-            r["cell"] for r in live.select("cell").distinct().collect()
-        }
-        for cell in touched_cells:
-            if cell not in still_live:
-                shutil.rmtree(
-                    os.path.join(cells_path, f"cell={cell}"),
-                    ignore_errors=True,
-                )
+        keep = store.read(spark, "cells", touched_cells)
+        if keep is not None:
+            live = keep.join(F.broadcast(keys), id_col, "left_anti").unionByName(live)
+        store.replace(merged, "directory", "_kb")
+        store.replace(live, "cells", "cell", touched_cells)
+        store.commit()
 
     return (
         changes.writeStream.foreachBatch(merge_batch)

@@ -13,14 +13,6 @@ Three materializations under ``table_path``:
 - ``anchors/`` — every doc's winnowing anchors (doc, pos, fp),
   partitioned on ``_kb`` (hash bucket of doc id). Append-only;
   replayed doc ids are dropped against the touched ``_kb`` buckets.
-  Appended LAST in the batch sequence — it doubles as the replay
-  guard, so a crash anywhere earlier makes the whole batch re-run.
-  The full write order is load-bearing: spans -> fpagg -> anchors.
-  A replay after a crash between spans and fpagg still sees the
-  pre-merge aggregate and re-derives the same prior-sole holders; a
-  replay after fpagg can no longer identify them, but their spans
-  already landed in the crashed run and the keep-side anti-join
-  preserves them (crash-window pins in test_streaming).
 - ``fpagg/`` — one row per distinct anchor fp with the (min, max) doc
   id ever seen holding it, partitioned on ``_fb`` (hash bucket of
   fp). ``mn != mx`` IS the shared-anchor predicate — exactly the
@@ -50,18 +42,18 @@ docs ingested so far at the same (k, w, min_anchors) — the
 mid-stream equality is the point: retroactive span growth on OLD docs
 must land in the same batch that made their anchors shared.
 
-Same honesty caveat as cdc_sink: parquet partition overwrites are not
-transactional; a transactional table format is the production wrapper.
-Sizing: ``n_buckets`` bounds the partition fan-out of all three tables
-— size it so a typical batch touches a small fraction (thousands at
-100 TB; the default 16 is fixture-scaled, same note as the near-dup
-sink). The only per-batch cost that grows with store age is parquet
-FILE accumulation inside touched partitions (measured: an identical
-500-doc probe drifted 9.4 -> 14.2 s over ~11 batches to a 50k-doc
-index, and a 4x-bucket control made it slower still — files, not
-rows); ``streaming.compact.compact_store`` resets it offline
-(4759 -> 48 files, probe back to ~1.8 s, spans row-identical —
-PLANS.md r11).
+The three tables are one manifest store, committed once per batch
+(``streaming.sinks``): every read of a batch sees the previous commit,
+and a crash leaves readers there for the replay to start from. Sizing:
+``n_buckets`` bounds the partition fan-out of all three tables — size it
+so a typical batch touches a small fraction (thousands at 100 TB; the
+default 16 is fixture-scaled, same note as the near-dup sink). The only
+per-batch cost that grows with store age is parquet FILE accumulation
+inside touched partitions (measured: an identical 500-doc probe drifted
+9.4 -> 14.2 s over ~11 batches to a 50k-doc index, and a 4x-bucket
+control made it slower still — files, not rows);
+``streaming.compact.compact_store`` resets it offline (4759 -> 48 files,
+probe back to ~1.8 s, spans row-identical — PLANS.md r11).
 """
 
 from __future__ import annotations
@@ -76,11 +68,11 @@ from dns_log_transformer_spark.operators.corpus import (
     hash_bucket,
     merge_anchor_spans,
 )
-from dns_log_transformer_spark.streaming.cdc_sink import N_BUCKETS_DEFAULT
 from dns_log_transformer_spark.streaming.sinks import (
+    N_BUCKETS_DEFAULT,
+    Store,
     drop_seen_ids,
-    has_partitions,
-    overwrite_partitions,
+    read_table,
     require_local_path,
     touched_buckets,
 )
@@ -90,11 +82,8 @@ def read_spans(spark: SparkSession, table_path: str) -> DataFrame | None:
     """The current span table: (doc_id, span_start, span_len,
     n_anchors) for every doc with a shared span. None before any
     batch has produced spans."""
-    require_local_path(table_path)
-    spans = os.path.join(table_path, "spans")
-    if not has_partitions(spans, "_kb="):
-        return None
-    return spark.read.parquet(spans).drop("_kb")
+    spans = read_table(spark, os.path.join(table_path, "spans"))
+    return None if spans is None else spans.drop("_kb")
 
 
 def winnow_index_sink(
@@ -148,18 +137,12 @@ def merge_docs_batch(
     w: int = 4,
     min_anchors: int = 2,
     n_buckets: int = N_BUCKETS_DEFAULT,
-    _fail_after: str | None = None,
     compact_max_files: int | None = None,
 ) -> None:
     """One micro-batch of the winnow index, public so tests and
     backfills can drive batches directly (the mv_sink.merge_epoch
-    convention). ``_fail_after`` ('spans' | 'fpagg') injects a crash
-    immediately after that write for the crash-window pins in
-    test_streaming — the write order it probes is load-bearing."""
+    convention)."""
     require_local_path(table_path)
-    anchors_path = os.path.join(table_path, "anchors")
-    fpagg_path = os.path.join(table_path, "fpagg")
-    spans_path = os.path.join(table_path, "spans")
 
     def kb(col: Column) -> Column:
         return (hash_bucket(col, seed=0) % n_buckets).cast("int")
@@ -170,6 +153,7 @@ def merge_docs_batch(
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
+    store = Store(table_path)
     from dns_log_transformer_spark.operators.text import (
         winnow_anchors_arrow,
     )
@@ -185,27 +169,21 @@ def merge_docs_batch(
         .withColumn("_kb", kb(F.col(id_col)))
         .localCheckpoint()
     )
-    anch_b = drop_seen_ids(anch_b, anchors_path, id_col)
+    anch_b = drop_seen_ids(anch_b, store, "anchors", id_col)
     if anch_b.isEmpty():
         return
 
-    # 2. merge the per-fp (min, max) doc aggregate — idempotent, so
-    #    a replayed batch re-merges to the same values. Touched _fb
-    #    partitions are read fully (their non-batch rows must
-    #    survive the overwrite) and rewritten keep+merged.
+    # 2. merge the per-fp (min, max) doc aggregate into the touched _fb
+    #    buckets, read fully (their non-batch rows must survive the
+    #    rewrite) — idempotent, so a replayed batch re-merges to the
+    #    same values
     bfp = (
         anch_b.groupBy("fp")
         .agg(F.min(id_col).alias("mn"), F.max(id_col).alias("mx"))
         .withColumn("_fb", fb(F.col("fp")))
     )
     touched_fb = touched_buckets(bfp, "_fb")
-    old_t = None
-    if has_partitions(fpagg_path, "_fb="):
-        old_t = (
-            spark.read.parquet(fpagg_path)
-            .filter(F.col("_fb").isin(touched_fb))
-            .localCheckpoint()  # pinned BEFORE its files are overwritten
-        )
+    old_t = store.read(spark, "fpagg", touched_fb)
     all_fp = bfp if old_t is None else old_t.unionByName(bfp)
     merged_part = (
         all_fp.groupBy("_fb", "fp")
@@ -235,85 +213,50 @@ def merge_docs_batch(
     if not aff.isEmpty():
         # 4. recompute spans for the affected docs only: their full
         #    anchor sets (batch + their _kb store buckets) filtered
-        #    to fps shared under the MERGED aggregate — derived from
-        #    merged_part overlaid on the PRE-overwrite store (for
-        #    fps in untouched partitions), never the updated store:
-        #    the spans rewrite must land BEFORE the fpagg overwrite
-        #    so a crash between them replays cleanly (see the write
-        #    ordering note below); re-derived with the exact
-        #    batch-operator islands code
+        #    to fps shared under the MERGED aggregate, overlaid on the
+        #    committed aggregate for fps in untouched buckets;
+        #    re-derived with the exact batch-operator islands code
         aff_kb = touched_buckets(aff.select(kb(F.col(id_col)).alias("_kb")))
         aff_anch = anch_b.join(F.broadcast(aff), id_col, "left_semi").select(
             id_col, "pos", "fp"
         )
-        if has_partitions(anchors_path, "_kb="):
-            old_anch = (
-                spark.read.parquet(anchors_path)
-                .filter(F.col("_kb").isin(aff_kb))
-                .join(F.broadcast(aff), id_col, "left_semi")
-                .select(id_col, "pos", "fp")
+        old_anch = store.read(spark, "anchors", aff_kb)
+        if old_anch is not None:
+            aff_anch = aff_anch.unionByName(
+                old_anch.join(F.broadcast(aff), id_col, "left_semi").select(
+                    id_col, "pos", "fp"
+                )
             )
-            aff_anch = aff_anch.unionByName(old_anch)
         need_fb = touched_buckets(
             aff_anch.select(fb(F.col("fp")).alias("_fb")), "_fb"
         )
-        shared_fps = merged_part.filter(
-            F.col("mn") != F.col("mx")
-        ).select("fp")
-        if has_partitions(fpagg_path, "_fb="):
-            # fps of affected docs living in partitions this batch
-            # did NOT touch are unchanged — their status comes from
-            # the store as it stands (still pre-overwrite)
-            untouched_shared = (
-                spark.read.parquet(fpagg_path)
-                .filter(
-                    F.col("_fb").isin(need_fb)
-                    & ~F.col("_fb").isin(touched_fb)
-                )
-                .filter(F.col("mn") != F.col("mx"))
-                .select("fp")
+        shared_fps = shared_now
+        untouched = store.read(
+            spark, "fpagg", [b for b in need_fb if b not in touched_fb]
+        )
+        if untouched is not None:
+            shared_fps = shared_fps.unionByName(
+                untouched.filter(F.col("mn") != F.col("mx")).select("fp")
             )
-            shared_fps = shared_fps.unionByName(untouched_shared)
         sa = aff_anch.join(shared_fps, "fp", "left_semi")
         new_spans = merge_anchor_spans(
             sa, id_col=id_col, k=k, min_anchors=min_anchors
         ).withColumn("_kb", kb(F.col(id_col)))
-        if has_partitions(spans_path, "_kb="):
-            keep = (
-                spark.read.parquet(spans_path)
-                .filter(F.col("_kb").isin(aff_kb))
-                .join(F.broadcast(aff), id_col, "left_anti")
+        keep = store.read(spark, "spans", aff_kb)
+        if keep is not None:
+            new_spans = keep.join(F.broadcast(aff), id_col, "left_anti").unionByName(
+                new_spans
             )
-            new_spans = keep.unionByName(new_spans)
-        new_spans = new_spans.localCheckpoint()
-        overwrite_partitions(new_spans, spans_path, "_kb")
-    if _fail_after == "spans":
-        raise RuntimeError("injected crash after the spans write")
+        store.replace(new_spans, "spans", "_kb", aff_kb)
 
-    # 5. WRITE ORDER IS LOAD-BEARING: spans (above) -> fpagg ->
-    #    anchors. The anchors append is the replay guard, so a
-    #    crash anywhere earlier re-runs the whole batch; the replay
-    #    is only correct because (a) spans landed before fpagg —
-    #    if it crashed in between, the replay still sees the
-    #    PRE-merge fpagg and recomputes the same prior-sole
-    #    holders; and (b) if it crashed after fpagg, the replay's
-    #    prior-sole set is empty but those docs' spans were already
-    #    written by the crashed run (and the keep-side anti-join
-    #    preserves them).
-    overwrite_partitions(merged_part, fpagg_path, "_fb")
-    if _fail_after == "fpagg":
-        raise RuntimeError("injected crash after the fpagg write")
-    anch_b.write.mode("append").partitionBy("_kb").parquet(anchors_path)
+    # 5. one commit for the three tables
+    store.replace(merged_part, "fpagg", "_fb")
+    store.append(anch_b, "anchors", "_kb")
+    store.commit()
 
-    # 6. optional self-compaction (VERDICT r12 #4): strictly AFTER the
-    #    anchors append — the replay guard — so a compaction crash
-    #    replays nothing and loses nothing; the swap's crash window
-    #    leaves a complete `.old` and the next run refuses loudly
-    #    (compact.py). A cheap listdir when no threshold is crossed.
+    # 6. optional self-compaction (VERDICT r12 #4), a commit of its own
+    #    after the batch's; a manifest read when no threshold is crossed
     if compact_max_files is not None:
         from dns_log_transformer_spark.streaming.compact import maybe_compact
 
-        maybe_compact(
-            batch_df.sparkSession, table_path, max_files=compact_max_files
-        )
-
+        maybe_compact(spark, table_path, max_files=compact_max_files)

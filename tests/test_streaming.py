@@ -18,6 +18,7 @@ import socket
 import threading
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from dns_log_transformer_spark.streaming import (
@@ -2192,58 +2193,188 @@ def test_corpus_monitor_threads_custom_id_col(spark, tmp_path):
         q.stop()
 
 
-def test_winnow_index_crash_windows_replay_clean(spark, tmp_path):
-    """The winnow sink's write order (spans -> fpagg -> anchors) is
-    load-bearing: a crash after EITHER intermediate write followed by
-    the foreachBatch replay must converge to the one-shot operator —
-    in particular the retroactive span growth of a PRIOR doc whose
-    anchor a crashed batch made shared must survive the fpagg-first
-    replay (the round-7 review finding)."""
-    import pytest as _pytest
+def _crash_cases(spark):
+    """Per sink: (start(stream, table, ck), schema, batch 1, batch 2,
+    read(table) as its readers see it, the one-shot result of a feed).
+    Batch 2 redelivers two batch-1 records, as Firehose may."""
+    import numpy as np
 
-    from dns_log_transformer_spark.operators import corpus
+    from dns_log_transformer_spark.operators import cdc, corpus, dedup, similarity
     from dns_log_transformer_spark.streaming import (
-        merge_docs_batch,
+        corpus_monitor_sink,
+        ivf_index_sink,
+        neardup_index_sink,
+        read_index,
+        read_latest,
+        read_pairs,
+        read_scorecard,
         read_spans,
+        upsert_sink,
+        winnow_index_sink,
     )
 
-    # a 40-doc slice keeps cross-batch shared anchors (the fixture is
-    # heavily near-duplicated) while halving this test's runtime; the
-    # orderBy pins WHICH 40 — limit on an unsorted scan does not
+    def rows_of(df, *cols):
+        if df is None:
+            return set()
+        return {tuple(r) for r in (df.select(*cols) if cols else df).collect()}
+
+    def first_by_id(rows):
+        seen: dict = {}
+        for r in rows:
+            seen.setdefault(r["doc_id"], r)
+        return list(seen.values())
+
+    # each extra id near-duplicates a doc under 40 (0~50, 5~450, 8~120,
+    # 8~360, 16~369, 26~176), so batch 2 emits pairs across batches
     docs = [
-        (r["doc_id"], r["text"])
-        for r in spark.read.parquet(
-            "/root/testdata/sf0.001/documents.parquet"
-        )
-        .select("doc_id", "text")
+        r.asDict()
+        for r in spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id", "text", "source")
+        .filter((F.col("doc_id") < 40) | F.col("doc_id").isin(50, 120, 176, 360, 369, 450))
         .orderBy("doc_id")
-        .limit(40)
         .collect()
     ]
-    b1, b2 = docs[0::2], docs[1::2]
+    d1 = [r for r in docs if r["doc_id"] < 40]
+    d2 = [r for r in docs if r["doc_id"] >= 40] + d1[:2]
+    doc_schema = "doc_id long, text string, source string"
 
-    def frame(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
+    def doc_frame(rows):
+        return spark.createDataFrame(
+            [(r["doc_id"], r["text"], r["source"]) for r in first_by_id(rows)],
+            doc_schema,
+        )
 
-    def check(table, rows, ctx):
-        df = read_spans(spark, table)
-        got = set() if df is None else {tuple(r) for r in df.collect()}
-        want = {tuple(r) for r in corpus.winnow_span_dedup(frame(rows)).collect()}
-        assert got == want, f"diverged after {ctx}"
-        assert want, "fixture produced no shared spans — vacuous test"
+    bench = doc_frame(docs[::9])
 
-    for fail_point in ("spans", "fpagg"):
-        table = str(tmp_path / f"widx_{fail_point}")
-        merge_docs_batch(frame(b1), table)
-        # batch 2 crashes right after the injected write...
-        with _pytest.raises(RuntimeError, match="injected crash"):
-            merge_docs_batch(frame(b2), table, _fail_after=fail_point)
-        # ...and foreachBatch replays it (at-least-once)
-        merge_docs_batch(frame(b2), table)
-        check(table, b1 + b2, f"crash after {fail_point} + replay")
-        # a further replay of the fully-committed batch is a no-op
-        merge_docs_batch(frame(b2), table)
-        check(table, b1 + b2, f"post-commit replay ({fail_point})")
+    cdc_schema = "k long, payload string, version int, op string"
+
+    def cdc_want(rows):
+        feed = spark.createDataFrame(
+            [(r["k"], r["payload"], r["version"], r["op"]) for r in rows], cdc_schema
+        )
+        return rows_of(cdc.upsert_latest(feed, ["k"]), "k", "payload", "version")
+
+    def u(k, payload, version, op="U"):
+        return {"k": k, "payload": payload, "version": version, "op": op}
+
+    codebook = (np.array([0, 1]), np.array([[1.0, 0.0], [-1.0, 0.0]]))
+    vec_schema = "vec_id long, version int, op string, embedding array<double>"
+
+    def vec_want(rows):
+        feed = spark.createDataFrame(
+            [(r["vec_id"], r["version"], r["op"], r["embedding"]) for r in rows],
+            vec_schema,
+        )
+        latest = cdc.upsert_latest(
+            feed, ["vec_id"], "version", "op", "D", tiebreak_cols=["op"]
+        )
+        return rows_of(similarity.ivf_assign(latest, codebook), "vec_id", "cell")
+
+    def v(vec_id, version, op, emb):
+        return {"vec_id": vec_id, "version": version, "op": op, "embedding": emb}
+
+    return {
+        "cdc": (
+            lambda st, t, ck: upsert_sink(st, t, ck, key_col="k"),
+            cdc_schema,
+            [u(k, f"base{k}", 0) for k in (1, 2, 3, 4)],
+            [u(2, "", 10, "D"), u(3, "repriced", 11), u(5, "new5", 12), u(1, "base1", 0)],
+            lambda t: rows_of(read_latest(spark, t), "k", "payload", "version"),
+            cdc_want,
+        ),
+        # vector 1 moves from cell 0 to cell 1 and vector 2 is deleted,
+        # both in batch 2: a reader must never see either in cell 0
+        "vector": (
+            lambda st, t, ck: ivf_index_sink(st, codebook, t, ck),
+            vec_schema,
+            [v(1, 0, "U", [1.0, 0.1]), v(2, 0, "U", [0.9, 0.0]), v(3, 0, "U", [-1.0, 0.0])],
+            [v(1, 1, "U", [-1.0, 0.2]), v(2, 1, "D", None), v(3, 0, "U", [-1.0, 0.0])],
+            lambda t: rows_of(read_index(spark, t), "vec_id", "cell"),
+            vec_want,
+        ),
+        # a list, not a set: a replay must not emit a pair twice
+        "neardup": (
+            neardup_index_sink,
+            doc_schema,
+            d1,
+            d2,
+            lambda t: sorted(tuple(r) for r in read_pairs(spark, t).collect()),
+            lambda rows: sorted(
+                tuple(r) for r in dedup.minhash_lsh_pairs(doc_frame(rows)).collect()
+            ),
+        ),
+        "winnow": (
+            winnow_index_sink,
+            doc_schema,
+            d1,
+            d2,
+            lambda t: rows_of(read_spans(spark, t)),
+            lambda rows: rows_of(corpus.winnow_span_dedup(doc_frame(rows))),
+        ),
+        "monitor": (
+            lambda st, t, ck: corpus_monitor_sink(st, bench, t, ck),
+            doc_schema,
+            d1,
+            d2,
+            lambda t: rows_of(read_scorecard(spark, t)),
+            lambda rows: rows_of(corpus.source_scorecard(doc_frame(rows), bench)),
+        ),
+    }
+
+
+@pytest.mark.parametrize("case", ["cdc", "vector", "neardup", "winnow", "monitor"])
+def test_sink_crash_before_manifest_commit_keeps_old_state(
+    spark, tmp_path, monkeypatch, case
+):
+    """Each keyed or append-only sink commits a batch with one manifest
+    replace (``sinks._commit_fence``). A failure just before it leaves
+    every reader on the previous batch; the replay converges to the
+    one-shot result, and so does a second replay of the committed
+    batch (its commit-log entry deleted)."""
+    from dns_log_transformer_spark.streaming import sinks
+
+    start, schema, b1, b2, read, want = _crash_cases(spark)[case]
+    src = tmp_path / "src"
+    src.mkdir()
+    table, ck = str(tmp_path / "store"), tmp_path / "ck"
+
+    def run():
+        q = start(spark.readStream.schema(schema).json(str(src)), table, str(ck))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def feed(name, rows):
+        with open(src / name, "w") as f:
+            for r in rows:
+                f.write(json.dumps(r) + "\n")
+
+    feed("b1.json", b1)
+    run()
+    old = read(table)
+    assert old == want(b1)
+    assert old != want(b1 + b2), "batch 2 changes nothing — vacuous test"
+
+    def crash(root, epoch, tables):
+        raise RuntimeError("injected crash before the manifest commit")
+
+    feed("b2.json", b2)
+    monkeypatch.setattr(sinks, "_commit_fence", crash)
+    with pytest.raises(Exception, match="injected crash"):
+        run()
+    assert read(table) == old
+
+    monkeypatch.undo()
+    run()
+    assert read(table) == want(b1 + b2)
+
+    last = max(int(n) for n in os.listdir(ck / "commits") if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        os.remove(ck / "commits" / name)
+    run()
+    assert (ck / "commits" / str(last)).exists()  # the batch did replay
+    assert read(table) == want(b1 + b2)
 
 
 def test_trigger_available_now_drains_and_stops(spark, tmp_path):
@@ -2453,81 +2584,6 @@ def test_corpus_monitor_reconciles_cap_crossing(spark, tmp_path):
     assert got == want
 
 
-def test_neardup_occupancy_survives_replayed_bucket_rows(spark, tmp_path):
-    """Crash-window pin (code-review r9): buckets/ is appended BEFORE
-    shingles/, and the replay-drop keys on the shingle store — so a
-    crash between the two writes replays the batch and appends its
-    bucket rows twice. Undeduped, those duplicates would double the
-    bucket's accumulated occupancy forever: a later batch would see a
-    true-occupancy-3 bucket as 5 > cap and silently drop valid pairs,
-    and read_pairs_reconciled would retroactively drop the early ones.
-    Both paths must count occupancy over deduplicated (doc, band, key)."""
-    import os as _os
-
-    from dns_log_transformer_spark.streaming.neardup_index import (
-        neardup_merge_batch,
-        read_pairs,
-        read_pairs_reconciled,
-    )
-
-    table = str(tmp_path / "replayidx")
-    hot = "the quick brown fox jumps over the lazy dog again and again"
-
-    def merge(rows):
-        neardup_merge_batch(
-            spark.createDataFrame(rows, "doc_id long, text string"),
-            table,
-            bucket_cap=4,
-        )
-
-    merge([(1, hot), (2, hot)])
-    assert {(r["doc_a"], r["doc_b"]) for r in read_pairs(spark, table).collect()} == {
-        (1, 2)
-    }
-
-    # simulate the crash-replay: re-append the store's own bucket rows
-    buckets = _os.path.join(table, "buckets")
-    dup = spark.read.parquet(buckets)
-    dup.write.mode("append").partitionBy("_bb").parquet(buckets)
-
-    # batch 2: true occupancy becomes 3 <= cap 4 (raw rows say 5) —
-    # the new doc's pairs must still emit
-    merge([(3, hot)])
-    got = {(r["doc_a"], r["doc_b"]) for r in read_pairs(spark, table).collect()}
-    assert got == {(1, 2), (1, 3), (2, 3)}, (
-        f"replay-duplicated bucket rows inflated occupancy: {sorted(got)}"
-    )
-    recon = {
-        (r["doc_a"], r["doc_b"])
-        for r in read_pairs_reconciled(spark, table, bucket_cap=4).collect()
-    }
-    assert recon == {(1, 2), (1, 3), (2, 3)}
-
-    # in-flight replay window: merge doc 4 fully, then simulate a crash
-    # BEFORE its shingles append landed (pairs/ and buckets/ did — the
-    # write order) by rewriting the shingle store without doc 4, and
-    # replay the batch. The union-level dedup must count the bucket's
-    # true occupancy (4 == cap), not store+batch double-counted (5),
-    # and the store must stay consistent for the reconciled read.
-    merge([(4, hot)])
-    sh_path = _os.path.join(table, "shingles")
-    sh_all = spark.read.parquet(sh_path).filter(F.col("doc_id") != 4)
-    sh_rows = sh_all.collect()
-    import shutil as _shutil
-
-    _shutil.rmtree(sh_path)
-    spark.createDataFrame(sh_rows, sh_all.schema).write.partitionBy(
-        "_kb"
-    ).parquet(sh_path)
-    merge([(4, hot)])  # the replay
-    expect = {(1, 2), (1, 3), (2, 3), (1, 4), (2, 4), (3, 4)}
-    recon2 = {
-        (r["doc_a"], r["doc_b"])
-        for r in read_pairs_reconciled(spark, table, bucket_cap=4).collect()
-    }
-    assert recon2 == expect, f"in-flight replay broke the index: {recon2}"
-
-
 def test_neardup_sink_self_compacts_mid_stream(spark, tmp_path):
     """Self-compaction wired INTO the sink (VERDICT r12 #4): with
     compact_max_files=1 the near-dup sink compacts its own shingle and
@@ -2663,6 +2719,7 @@ def test_maybe_compact_trigger_policy(spark, tmp_path):
         max_files_per_partition,
         maybe_compact,
     )
+    from dns_log_transformer_spark.streaming.sinks import read_manifest
     from dns_log_transformer_spark.streaming.winnow_index import (
         merge_docs_batch,
         read_spans,
@@ -2693,10 +2750,13 @@ def test_maybe_compact_trigger_policy(spark, tmp_path):
     assert sorted(res) == sorted(due)
     post = sorted(tuple(r) for r in read_spans(spark, wtab).collect())
     assert post == pre
+    tables = read_manifest(wtab)["tables"]
     for sub in res:
         assert max_files_per_partition(f"{wtab}/{sub}") == 1
-        for part in glob.glob(f"{wtab}/{sub}/*=*"):
-            assert len(glob.glob(f"{part}/*.parquet")) == 1
+        # every bucket the manifest names is one dir holding one file
+        for bucket, dirs in tables[sub].items():
+            assert len(dirs) == 1
+            assert len(glob.glob(f"{wtab}/{sub}/{bucket}/{dirs[0]}/*.parquet")) == 1
     # freshly compacted: the same threshold is a no-op again
     assert compaction_due(wtab, max_files=1) == []
     # the NEXT batch still lands normally on the swapped-in store
@@ -2707,24 +2767,18 @@ def test_maybe_compact_trigger_policy(spark, tmp_path):
 
 
 def test_compact_store_preserves_content_and_fence(spark, tmp_path):
-    """Offline small-file compaction (streaming/compact.py) — the
-    measured mitigation for the sinks' only per-batch growth term
-    (file accumulation in touched partitions, PLANS.md r11 curve):
-    after compacting a multi-batch winnow store every partition holds
-    ONE file and read_spans is row-identical; on an mv store the
-    _FENCE json and _base fold dir survive the swap and read_mv is
-    unchanged; a leftover .old from a crashed compaction refuses
-    loudly instead of guessing."""
+    """Small-file compaction (streaming/compact.py) — the measured
+    mitigation for the sinks' only per-batch growth term (file
+    accumulation in touched buckets, PLANS.md r11 curve): after
+    compacting a multi-batch winnow store the manifest names ONE dir
+    holding ONE file per bucket and read_spans is row-identical. On an
+    mv store compaction leaves the fold base alone, and compact_mv
+    folds the live partial into a new fenced base with read_mv
+    unchanged."""
     import glob
-    import json
-    import os
 
-    import pytest as _pytest
-
-    from dns_log_transformer_spark.streaming.compact import (
-        compact_partitioned_table,
-        compact_store,
-    )
+    from dns_log_transformer_spark.streaming import sinks
+    from dns_log_transformer_spark.streaming.compact import compact_store
     from dns_log_transformer_spark.streaming.mv_sink import (
         compact_mv,
         merge_epoch,
@@ -2752,11 +2806,14 @@ def test_compact_store_preserves_content_and_fence(spark, tmp_path):
     assert set(res) == {"anchors", "fpagg", "spans"}
     post = sorted(tuple(r) for r in read_spans(spark, wtab).collect())
     assert post == pre
+    tables = sinks.read_manifest(wtab)["tables"]
     for sub in res:
-        for part in glob.glob(f"{wtab}/{sub}/*=*"):
-            assert len(glob.glob(f"{part}/*.parquet")) == 1
+        assert len(tables[sub]) == res[sub]
+        for bucket, dirs in tables[sub].items():
+            assert len(dirs) == 1
+            assert len(glob.glob(f"{wtab}/{sub}/{bucket}/{dirs[0]}/*.parquet")) == 1
 
-    # --- mv store: fold, then one live epoch, then file-compaction
+    # --- mv store: fold, then one live epoch, then compaction
     mtab = str(tmp_path / "mv")
     facts = spark.createDataFrame(
         [(k % 7, k) for k in range(100)], "k long, v long"
@@ -2766,19 +2823,14 @@ def test_compact_store_preserves_content_and_fence(spark, tmp_path):
     compact_mv(spark, mtab)  # creates _FENCE + _base_e2
     merge_epoch(facts, 3, mtab, "k", "v")  # live partial above the fence
     pre_mv = sorted(tuple(r) for r in read_mv(spark, mtab).collect())
-    assert compact_partitioned_table(spark, mtab) == 1  # _epoch=3
-    assert os.path.exists(os.path.join(mtab, "_FENCE"))
-    with open(os.path.join(mtab, "_FENCE")) as f:
-        base = json.load(f)["base"]
-    assert os.path.isdir(os.path.join(mtab, base))
+    assert compact_store(spark, mtab) == {}  # a fold base is one dir already
+    assert sinks.read_fence(mtab) == (2, "_base_e2")
+    compact_mv(spark, mtab)
+    assert sinks.read_fence(mtab) == (3, "_base_e3")
+    assert os.path.isdir(os.path.join(mtab, "_base_e3"))
+    assert not os.path.isdir(os.path.join(mtab, "_epoch=3"))
     post_mv = sorted(tuple(r) for r in read_mv(spark, mtab).collect())
     assert post_mv == pre_mv
-
-    # --- crashed-compaction leftover refuses — as a REAL exception, not
-    # an assert (which `python -O` compiles out; ADVICE r11)
-    os.mkdir(mtab + ".old")
-    with _pytest.raises(FileExistsError, match="crashed compaction"):
-        compact_partitioned_table(spark, mtab)
 
 
 def test_mv_sink_self_fold_trigger(spark, tmp_path):

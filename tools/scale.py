@@ -6,8 +6,7 @@ Builds ``scratch/x<factor>`` under the repo root from the sf0.1 fixture
 (once: a table already there is kept), then prints one line per named
 query with its 1x and Nx time, both row counts and the ratio, under a
 cpus/loadavg header. With no names it only builds the replica, which
-``bhj_sweep_r13.py``, ``gen_broadcast_allowlist.py`` and
-``stream_perf_r16.py`` read.
+``bhj_sweep_r13.py`` and ``gen_broadcast_allowlist.py`` read.
 
 One replica rule covers every table but ``nation`` and ``region``, the
 fixed-size dimensions, which stay 1x. Replica ``r``:
